@@ -25,6 +25,9 @@ import org.apache.spark.sql.functions._
   */
 object ScalingRunner {
 
+  /** The `SCALING_RESULT` line's JSON body. */
+  private final case class Result(cores: Int, sec: Double, rows: Long)
+
   /** The scaling job: per-image PNG decode parity + spatial PIP join +
     * per-tile aggregation — the BASELINE.json metric workload. Returns the
     * number of image rows processed (throughput numerator). */
@@ -90,7 +93,7 @@ object ScalingRunner {
       ((System.nanoTime() - t0) / 1e9, rows)
     }.sortBy(_._1)
     val (sec, rows) = runs(runs.size / 2)
-    println(s"""SCALING_RESULT {"cores":$cores,"sec":$sec,"rows":$rows}""")
+    println("SCALING_RESULT " + graft.util.Json.write(Result(cores, sec, rows)))
     s.stop()
   }
 
@@ -176,10 +179,8 @@ object ScalingRunner {
       val line = out.linesIterator.find(_.startsWith("SCALING_RESULT ")).getOrElse(
         throw new IllegalStateException(
           s"ScalingRunner(cores=$cores) rc=${proc.exitValue()} produced no result; output:\n$out"))
-      val body = line.stripPrefix("SCALING_RESULT ")
-      val sec = """"sec":([0-9.Ee+-]+)""".r.findFirstMatchIn(body).get.group(1).toDouble
-      val rows = """"rows":(\d+)""".r.findFirstMatchIn(body).get.group(1).toLong
-      (sec, rows)
+      val r = graft.util.Json.read[Result](line.stripPrefix("SCALING_RESULT "))
+      (r.sec, r.rows)
     }
     try attempt() catch {
       case e: Exception => // one retry: a lost level must not lose the bench

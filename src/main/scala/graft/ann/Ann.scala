@@ -81,6 +81,11 @@ object Ann {
     bucket
   }
 
+  /** (vector, table) → that table's [[lshBucket]]; each table draws its own
+    * hyperplanes from `seed`. */
+  private def bucketUdf(nPlanes: Int, seed: Long) =
+    udf((vec: Seq[Float], table: Int) => lshBucket(vec, nPlanes, seed + table * 7919L))
+
   /** Deterministically cap each (keyCols) bucket of `df` to ~`cap` rows by
     * keeping the id-hash residue-0 stratum — the top-k analog of
     * [[graft.text.Dedup.subBucketed]]: where near-dup SPLITS an oversize
@@ -117,12 +122,10 @@ object Ann {
       nPlanes: Int = 12, nTables: Int = 4, seed: Long = 42L,
       fallbackCells: Int = 16, smallCorpusBytes: Long = 64L << 20,
       maxBucketSize: Int = 100000): DataFrame = {
-    val bucketUdf = udf((vec: Seq[Float], table: Int) =>
-      lshBucket(vec, nPlanes, seed + table * 7919L))
     val tables = (0 until nTables).map(lit(_))
     def withBuckets(df: DataFrame, vecCol: String): DataFrame =
       df.withColumn("table", explode(array(tables: _*)))
-        .withColumn("bucket", bucketUdf(col(vecCol), col("table")))
+        .withColumn("bucket", bucketUdf(nPlanes, seed)(col(vecCol), col("table")))
 
     val spark = queries.sparkSession
     // the candidates localCheckpoint below pins executor blocks; free
@@ -335,8 +338,6 @@ object Ann {
   def nearDuplicatePairs(corpus: DataFrame, threshold: Double = 0.95,
       nPlanes: Int = 12, nTables: Int = 4, seed: Long = 42L,
       maxBucketSize: Int = 100000, expandExactGroups: Boolean = true): DataFrame = {
-    val bucketUdf = udf((vec: Seq[Float], table: Int) =>
-      lshBucket(vec, nPlanes, seed + table * 7919L))
     val tables = (0 until nTables).map(lit(_))
     val base = corpus.select(col("c_id").as("_id"), col("c_vec").as("_vec"))
     // identical-vector collapse via the shared partial-aggregating groupBy
@@ -346,7 +347,7 @@ object Ann {
     val (reps, membership) = graft.text.Dedup.collapseByKey(
       base, "_vec", "_id", expandExactGroups, keepKeyInMembers = true)
     val banded = reps.withColumn("table", explode(array(tables: _*)))
-      .withColumn("bucket", bucketUdf(col("_vec"), col("table")))
+      .withColumn("bucket", bucketUdf(nPlanes, seed)(col("_vec"), col("table")))
     // count guard via partial-aggregated groupBy + broadcast of only the
     // (rare) oversize buckets — never a window re-shuffle of the banded
     // side. The rarity assumption is measured, not silent: the named

@@ -1,7 +1,9 @@
 package graft.osmpbf.codec
 
 import graft.osmpbf.model.{BlobPointer, HeaderMeta}
+import graft.util.{HadoopIO, Json}
 
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 
@@ -75,34 +77,34 @@ object FrameScanner {
     * pbf invalidates its sidecar. */
   def sidecarPath(pathStr: String): String = pathStr + ".graft-stats.json"
 
-  private val sidecarEntryRe =
-    ("""\{"offset":(\d+),"nodes":(\d+),"ways":(\d+),"relations":(\d+),""" +
-      """"changesets":(\d+)(?:,"min_id":(-?\d+),"max_id":(-?\d+))?\}""").r
+  /** One blob's sidecar entry, keyed by its header offset; a blob with no
+    * elements has no id range. */
+  final case class SidecarBlob(offset: Long, nodes: Long, ways: Long, relations: Long,
+      changesets: Long,
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) minId: Option[Long],
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) maxId: Option[Long]) {
+    def stats: BlobStats = BlobStats(nodes, ways, relations, changesets,
+      minId.getOrElse(Long.MinValue), maxId.getOrElse(Long.MaxValue))
+  }
 
+  private final case class Sidecar(fileSize: Long, blobs: Seq[SidecarBlob])
+
+  /** Write `pathStr`'s sidecar atomically (task-attempt scoped, so retried
+    * and speculative tasks are safe). */
+  def writeSidecar(pathStr: String, fileSize: Long, blobs: Seq[SidecarBlob],
+      conf: Configuration, attemptId: Long): Unit = {
+    val json = Json.write(Sidecar(fileSize, blobs.sortBy(_.offset)))
+    val p = new Path(sidecarPath(pathStr))
+    HadoopIO.writeAtomic(p.getParent.toString, p.getName, conf, attemptId)(
+      _.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+  }
+
+  /** Sidecar stats by blob header offset; empty when there is no sidecar,
+    * it is stale (pbf rewritten since the stats pass) or it does not parse. */
   private def loadSidecar(pathStr: String, fileSize: Long,
       conf: Configuration): Map[Long, BlobStats] = try {
-    val p = new Path(sidecarPath(pathStr))
-    val fs = p.getFileSystem(conf)
-    if (!fs.exists(p)) Map.empty
-    else {
-      val in = fs.open(p)
-      val txt = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        val tmp = new Array[Byte](8192)
-        var n = in.read(tmp)
-        while (n >= 0) { buf.write(tmp, 0, n); n = in.read(tmp) }
-        buf.toString("UTF-8")
-      } finally in.close()
-      val sizeOk = """"file_size":(\d+)""".r.findFirstMatchIn(txt)
-        .exists(_.group(1).toLong == fileSize)
-      if (!sizeOk) Map.empty // stale: pbf rewritten since the stats pass
-      else sidecarEntryRe.findAllMatchIn(txt).map { m =>
-        m.group(1).toLong -> BlobStats(
-          m.group(2).toLong, m.group(3).toLong, m.group(4).toLong, m.group(5).toLong,
-          Option(m.group(6)).map(_.toLong).getOrElse(Long.MinValue),
-          Option(m.group(7)).map(_.toLong).getOrElse(Long.MaxValue))
-      }.toMap
-    }
+    Json.readFile[Sidecar](sidecarPath(pathStr), conf).filter(_.fileSize == fileSize)
+      .map(_.blobs.map(b => b.offset -> b.stats).toMap).getOrElse(Map.empty)
   } catch { case _: Exception => Map.empty }
 
   def scan(pathStr: String, conf: Configuration = new Configuration()): ScanResult = {

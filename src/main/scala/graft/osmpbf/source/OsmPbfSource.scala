@@ -403,33 +403,16 @@ case class OsmPbfPartition(blobs: Array[BlobPointer]) extends InputPartition
   * (000000001.osm.pbf, …, header_block.rs:33-71 replication_sequence), so
   * lexical order IS sequence order and a single string is a complete,
   * restart-safe offset. */
-case class OsmPbfOffset(lastFile: String)
+case class OsmPbfOffset(
+    @com.fasterxml.jackson.annotation.JsonProperty("lastFile") lastFile: String)
     extends org.apache.spark.sql.connector.read.streaming.Offset {
-  override def json(): String = {
-    val esc = lastFile.replace("\\", "\\\\").replace("\"", "\\\"")
-    s"""{"lastFile":"$esc"}"""
-  }
+  override def json(): String = graft.util.Json.write(this)
 }
 
 object OsmPbfOffset {
-  def fromJson(json: String): OsmPbfOffset = {
-    val m = """\{"lastFile":"(.*)"\}""".r
-    json match {
-      case m(v) =>
-        // single left-to-right pass so json()/fromJson are exact inverses —
-        // sequential replace() mis-decodes a backslash-before-quote (e.g.
-        // the path fragment `\"` escapes to `\\\"` but replace-quote-first
-        // reads it as `\` + `"` + dangling state)
-        val sb = new java.lang.StringBuilder(v.length)
-        var i = 0
-        while (i < v.length) {
-          if (v.charAt(i) == '\\' && i + 1 < v.length) { sb.append(v.charAt(i + 1)); i += 2 }
-          else { sb.append(v.charAt(i)); i += 1 }
-        }
-        OsmPbfOffset(sb.toString)
-      case _ => throw new IllegalArgumentException(s"bad osmpbf offset: $json")
-    }
-  }
+  def fromJson(json: String): OsmPbfOffset =
+    scala.util.Try(graft.util.Json.read[OsmPbfOffset](json)).toOption.filter(_.lastFile != null)
+      .getOrElse(throw new IllegalArgumentException(s"bad osmpbf offset: $json"))
 }
 
 /** Micro-batch streaming read: `spark.readStream.format("osmpbf").load(dir)`

@@ -56,7 +56,7 @@ object OsmStats {
     // foreign input is ONE multi-GB planet file, so file-granular tasks
     // would put the whole decode on one core; blob-granular tasks spread
     // it across the cluster. Stage 3 — one reducer per file assembles and
-    // writes its sidecar (entries are ~100 B strings; the raw payloads
+    // writes its sidecar (entries are ~100 B each; the raw payloads
     // never move). The driver only ever holds the per-file summary.
     val sc = spark.sparkContext
     val scanned = sc.parallelize(paths, math.max(1, math.min(paths.size, 2048)))
@@ -97,23 +97,17 @@ object OsmStats {
             }
             graft.osmpbf.codec.PbfCodec.decodeBlock(raw, h,
               graft.osmpbf.codec.PbfCodec.KindAll, wantTags = false, wantInfo = false)
-            val idRange = if (n + w + r + c > 0) s""","min_id":$lo,"max_id":$hi}""" else "}"
-            (ptr.path, (ptr.headerOffset,
-              s"""{"offset":${ptr.headerOffset},"nodes":$n,"ways":$w,"relations":$r,"changesets":$c$idRange"""))
+            val any = n + w + r + c > 0
+            (ptr.path, FrameScanner.SidecarBlob(ptr.headerOffset, n, w, r, c,
+              Option.when(any)(lo), Option.when(any)(hi)))
           }
         val sizes = scanned.map { case (p, sz, _, _) => (p, sz) }
         val written = entries.groupByKey(math.max(1, math.min(paths.size, 2048)))
           .join(sizes)
           .map { case (p, (es, fileSize)) =>
-            val conf = confS.value
-            val body = es.toSeq.sortBy(_._1).map(_._2).mkString(",")
-            val json = s"""{"file_size":$fileSize,"blobs":[$body]}"""
-            val hp = new org.apache.hadoop.fs.Path(p)
             val attempt = Option(org.apache.spark.TaskContext.get())
               .map(_.taskAttemptId()).getOrElse(0L)
-            graft.util.HadoopIO.writeAtomic(hp.getParent.toString,
-              hp.getName + ".graft-stats.json", conf, attempt)(
-              _.write(json.getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+            FrameScanner.writeSidecar(p, fileSize, es.toSeq, confS.value, attempt)
             (p, es.size)
           }.collect().toMap
         scanned.map { case (p, _, total, missing) => (p, missing.size, total, missing.nonEmpty) }

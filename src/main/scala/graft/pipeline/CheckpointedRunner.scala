@@ -1,7 +1,7 @@
 package graft.pipeline
 
 import graft.spatial.cell.{functions => F}
-import graft.util.HadoopIO
+import graft.util.{HadoopIO, Json}
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
@@ -41,23 +41,26 @@ object CheckpointedRunner {
 
   def markerPath(outDir: String, bucket: Long): String = s"$outDir/_ckpt/$bucket.json"
 
-  /** A bucket is done only if its marker says complete AND was written by
-    * the SAME lineage and bucket resolution as the current run — a marker
-    * from an older lineage must not validate (its output is stale). */
-  def isDone(outDir: String, bucket: Long, lineage: String, bucketRes: Int,
-      conf: org.apache.hadoop.conf.Configuration): Boolean = {
-    val p = markerPath(outDir, bucket)
-    HadoopIO.exists(p, conf) && {
-      val m = HadoopIO.readString(p, conf)
-      m.contains("\"complete\":true") &&
-        m.contains("\"lineage\":\"" + lineage + "\"") &&
-        // extract-and-compare, NOT substring: a contains of "bucket_res":1
-        // would accept a marker recording 12 (prefix match) and skip every
-        // bucket after a resolution change
-        """"bucket_res":(\d+)""".r.findFirstMatchIn(m)
-          .exists(_.group(1).toInt == bucketRes)
-    }
+  /** `_ckpt/<bucket>.json`: written once the bucket's output is committed. */
+  private final case class Marker(bucket: Long, complete: Boolean, rows: Long,
+      wallMs: Long, lineage: String, bucketRes: Int) {
+    /** Complete AND from the same lineage and bucket resolution as the
+      * current run: an older lineage's output is stale. */
+    def validFor(lineage: String, bucketRes: Int): Boolean =
+      complete && lineage == this.lineage && bucketRes == this.bucketRes
   }
+
+  /** `_staged_lineage.json`: what the staged input copy was built from. */
+  private final case class StagedStamp(lineage: String, bucketRes: Int)
+
+  /** `_pipeline_metrics.json`: the whole output's totals after a run. */
+  private final case class PipelineMetrics(bucketsTotal: Int, bucketsRun: Int,
+      bucketsSkipped: Int, rows: Long, wallMs: Long, lineage: String)
+
+  /** A bucket is done only if its marker is valid for this run. */
+  def isDone(outDir: String, bucket: Long, lineage: String, bucketRes: Int,
+      conf: org.apache.hadoop.conf.Configuration): Boolean =
+    Json.readFile[Marker](markerPath(outDir, bucket), conf).exists(_.validFor(lineage, bucketRes))
 
   /** Run `work` once per bucket of `tiled` (a DataFrame with a `tile`
     * column), checkpointing each. `work` receives the bucket's slice and
@@ -88,6 +91,8 @@ object CheckpointedRunner {
       failInjector: Long => Unit = _ => (),
       parallelism: Int = 1): Seq[BucketResult] = {
     val conf = spark.sessionState.newHadoopConf()
+    def writeMetrics(m: PipelineMetrics): Unit =
+      HadoopIO.writeString(s"$outDir/_pipeline_metrics.json", Json.write(m), conf)
     val stagedDir = s"$outDir/staged_input"
     val lineageFile = s"$outDir/_staged_lineage.json"
     // staging validity covers BOTH lineage and bucketRes: the staged copy
@@ -95,10 +100,9 @@ object CheckpointedRunner {
     // different bucketRes must re-stage (reusing the old partitioning would
     // run work over old-resolution slices while stamping markers with the
     // new resolution)
-    val stagedStamp = s"""{"lineage":"$lineage","bucket_res":$bucketRes}"""
+    val stagedStamp = StagedStamp(lineage, bucketRes)
     val stagedValid = HadoopIO.exists(s"$stagedDir/_SUCCESS", conf) &&
-      HadoopIO.exists(lineageFile, conf) &&
-      HadoopIO.readString(lineageFile, conf) == stagedStamp
+      Json.readFile[StagedStamp](lineageFile, conf).contains(stagedStamp)
     if (!stagedValid) {
       // lineage changed (or first run): everything downstream of the staging
       // is stale — drop old bucket outputs and markers so a bucket absent
@@ -129,7 +133,7 @@ object CheckpointedRunner {
         org.slf4j.LoggerFactory.getLogger(getClass).warn(
           s"checkpointed runner: dropped $nullRows input row(s) with a null " +
             s"tile (null lon/lat) of ${obs.get("total")} while staging $stagedDir")
-      HadoopIO.writeString(lineageFile, stagedStamp, conf)
+      HadoopIO.writeString(lineageFile, Json.write(stagedStamp), conf)
     }
     // bucket list from the partition directory names — a filesystem listing,
     // not a data scan. Non-numeric partition names (a pre-existing staged
@@ -143,9 +147,7 @@ object CheckpointedRunner {
     if (buckets.isEmpty) {
       // an EMPTY input stages only _SUCCESS — reading it back would throw
       // "Unable to infer schema", permanently (staging validates on resume)
-      HadoopIO.writeString(s"$outDir/_pipeline_metrics.json",
-        s"""{"buckets_total":0,"buckets_run":0,"buckets_skipped":0,
-           |"rows":0,"wall_ms":0,"lineage":"$lineage"}""".stripMargin, conf)
+      writeMetrics(PipelineMetrics(0, 0, 0, 0L, 0L, lineage))
       return Seq.empty
     }
     val staged = spark.read.parquet(stagedDir)
@@ -154,15 +156,10 @@ object CheckpointedRunner {
     // runs still aggregate to whole-dataset metrics (round-5 review: a
     // resume that re-ran 1 of 16 buckets used to publish rows for that one
     // bucket as if it described the whole output)
-    def markerRows(b: Long): Long =
-      """"rows":(-?\d+)""".r
-        .findFirstMatchIn(HadoopIO.readString(markerPath(outDir, b), conf))
-        .map(_.group(1).toLong).getOrElse(-1L)
-
-    def runBucket(b: Long): BucketResult =
-      if (isDone(outDir, b, lineage, bucketRes, conf))
-        BucketResult(b, markerRows(b), 0L, skipped = true)
-      else {
+    def runBucket(b: Long): BucketResult = Json.readFile[Marker](markerPath(outDir, b), conf) match {
+      case Some(m) if m.validFor(lineage, bucketRes) =>
+        BucketResult(b, m.rows, 0L, skipped = true)
+      case _ =>
         val t0 = System.nanoTime()
         failInjector(b) // test hook: simulate a crash mid-run
         val slice = staged.where(col("_bucket") === b).drop("_bucket")
@@ -171,12 +168,10 @@ object CheckpointedRunner {
           .write.mode("overwrite").parquet(s"$outDir/bucket=$b")
         val rows = obs.get("rows").asInstanceOf[Long]
         val wallMs = (System.nanoTime() - t0) / 1000000
-        val marker =
-          s"""{"bucket":$b,"complete":true,"rows":$rows,"wall_ms":$wallMs,
-             |"lineage":"$lineage","bucket_res":$bucketRes}""".stripMargin
-        HadoopIO.writeString(markerPath(outDir, b), marker, conf)
+        HadoopIO.writeString(markerPath(outDir, b),
+          Json.write(Marker(b, complete = true, rows, wallMs, lineage, bucketRes)), conf)
         BucketResult(b, rows, wallMs, skipped = false)
-      }
+    }
 
     val results: Seq[BucketResult] =
       if (parallelism <= 1 || buckets.size <= 1) buckets.map(runBucket)
@@ -210,13 +205,8 @@ object CheckpointedRunner {
     // outDir, not just this invocation's work); wall_ms covers only the
     // buckets actually run here
     val done = results.filterNot(_.skipped)
-    val metrics =
-      s"""{"buckets_total":${buckets.length},"buckets_run":${done.length},
-         |"buckets_skipped":${results.count(_.skipped)},
-         |"rows":${results.map(r => math.max(r.rows, 0L)).sum},
-         |"wall_ms":${done.map(_.wallMs).sum},
-         |"lineage":"$lineage"}""".stripMargin
-    HadoopIO.writeString(s"$outDir/_pipeline_metrics.json", metrics, conf)
+    writeMetrics(PipelineMetrics(buckets.length, done.length, results.count(_.skipped),
+      results.map(_.rows).sum, done.map(_.wallMs).sum, lineage))
     results
   }
 
@@ -232,9 +222,7 @@ object CheckpointedRunner {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith("bucket="))
       .filter { s =>
         val b = s.getPath.getName.stripPrefix("bucket=")
-        val marker = s"$outDir/_ckpt/$b.json"
-        HadoopIO.exists(marker, conf) &&
-          HadoopIO.readString(marker, conf).contains("\"complete\":true")
+        Json.readFile[Marker](s"$outDir/_ckpt/$b.json", conf).exists(_.complete)
       }
       .map(_.getPath.toString)
     if (complete.isEmpty)

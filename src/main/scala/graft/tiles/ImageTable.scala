@@ -1,5 +1,9 @@
 package graft.tiles
 
+import graft.util.Json
+
+import com.fasterxml.jackson.annotation.JsonProperty
+import com.fasterxml.jackson.databind.annotation.JsonDeserialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -16,53 +20,47 @@ import org.apache.spark.sql.functions._
   */
 object ImageTable {
 
+  /** One data file of a snapshot. */
+  private final case class ManifestEntry(path: String, size: Long)
+
+  /** `metadata/v<id>.metadata.json`; `schema` holds `StructType.json`. */
+  private final case class Metadata(
+      @JsonProperty("format-version") formatVersion: Int,
+      @JsonProperty("snapshot-id") snapshotId: Long,
+      @JsonProperty("parent-snapshot-id")
+      @JsonDeserialize(contentAs = classOf[java.lang.Long]) parentSnapshotId: Option[Long],
+      schema: String,
+      manifest: Seq[ManifestEntry],
+      @JsonProperty("written-at") writtenAt: String)
+
+  private def metadataPath(root: String, snapshotId: Long): String =
+    s"$root/metadata/v$snapshotId.metadata.json"
+
+  private def readMetadata(root: String, snapshotId: Long,
+      conf: org.apache.hadoop.conf.Configuration): Metadata =
+    Json.read[Metadata](graft.util.HadoopIO.readString(metadataPath(root, snapshotId), conf))
+
   /** Manifest entries for the part-files of one snapshot's data dir —
-    * listed through the Hadoop FS (works on HDFS/S3, not just local disk).
-    * write() and append() share this so their manifests stay byte-compatible
-    * (manifest() extracts paths by regex; readIncremental set-differences
-    * them). */
+    * listed through the Hadoop FS (works on HDFS/S3, not just local disk). */
   private def dataFileEntries(dataDir: String,
-      conf: org.apache.hadoop.conf.Configuration): Seq[String] = {
+      conf: org.apache.hadoop.conf.Configuration): Seq[ManifestEntry] = {
     val fs = graft.util.HadoopIO.fileSystem(dataDir, conf)
     fs.listStatus(new org.apache.hadoop.fs.Path(dataDir))
       .filter(s => s.isFile && s.getPath.getName.startsWith("part-") &&
         s.getPath.getName.endsWith(".parquet"))
-      .map(s => s"""{"path":"${jsonEscape(s.getPath.toString)}","size":${s.getLen}}""")
+      .map(s => ManifestEntry(s.getPath.toString, s.getLen))
       .toSeq
   }
 
-  // JSON string escaping for manifest paths (same rule the schema string
-  // already used): a table rooted under a directory containing `"` or `\`
-  // would otherwise corrupt its manifest entries. Escape on write,
-  // unescape on read; append's parent-manifest copy re-embeds the RAW
-  // escaped entries, so only manifest() unescapes.
-  private def jsonEscape(s: String): String =
-    s.replace("\\", "\\\\").replace("\"", "\\\"")
-
-  private def jsonUnescape(s: String): String =
-    """\\(.)""".r.replaceAllIn(s,
-      m => scala.util.matching.Regex.quoteReplacement(m.group(1)))
-
-  // one escaped-JSON-string char: anything but quote/backslash, or an
-  // escape pair — shared by the manifest reader and append's parent copy
-  private val JsonStrChar = """(?:[^"\\]|\\.)"""
-
   private def commitMetadata(root: String, snapshotId: Long, parent: Option[Long],
-      schema: org.apache.spark.sql.types.StructType, entries: Seq[String],
+      schema: org.apache.spark.sql.types.StructType, entries: Seq[ManifestEntry],
       conf: org.apache.hadoop.conf.Configuration): Unit = {
-    val schemaJson = schema.json.replace("\\", "\\\\").replace("\"", "\\\"")
-    val parentField = parent.map(p => s""""parent-snapshot-id":$p,""").getOrElse("")
-    val meta =
-      s"""{"format-version":2,"snapshot-id":$snapshotId,$parentField
-         |"schema":"$schemaJson",
-         |"manifest":[${entries.mkString(",")}],
-         |"written-at":"deterministic"}""".stripMargin
+    val meta = Json.write(Metadata(2, snapshotId, parent, schema.json, entries, "deterministic"))
     // atomic replaces: a reader of `current` (or of a metadata file being
     // re-committed) must see complete old bytes or complete new bytes —
     // the truncate-first writeString could expose "" or a prefix, and a
     // crash between truncate and write would brick the table pointer
-    graft.util.HadoopIO.replaceStringAtomic(
-      s"$root/metadata/v$snapshotId.metadata.json", meta, conf)
+    graft.util.HadoopIO.replaceStringAtomic(metadataPath(root, snapshotId), meta, conf)
     graft.util.HadoopIO.replaceStringAtomic(
       s"$root/metadata/current", snapshotId.toString, conf)
   }
@@ -93,12 +91,8 @@ object ImageTable {
       spark.sessionState.newHadoopConf()).trim.toLong
 
   /** Data-file paths recorded in a snapshot's metadata manifest. */
-  def manifest(spark: SparkSession, root: String, snapshotId: Long): Seq[String] = {
-    val meta = graft.util.HadoopIO.readString(
-      s"$root/metadata/v$snapshotId.metadata.json", spark.sessionState.newHadoopConf())
-    (""""path":"(""" + JsonStrChar + """+)"""").r
-      .findAllMatchIn(meta).map(m => jsonUnescape(m.group(1))).toSeq
-  }
+  def manifest(spark: SparkSession, root: String, snapshotId: Long): Seq[String] =
+    readMetadata(root, snapshotId, spark.sessionState.newHadoopConf()).manifest.map(_.path)
 
   def load(spark: SparkSession, root: String): DataFrame =
     loadSnapshot(spark, root, currentSnapshot(spark, root))
@@ -107,7 +101,14 @@ object ImageTable {
     * Iceberg contract that makes fast appends and incremental reads work:
     * a snapshot is its file list, and files are shared across snapshots. */
   def loadSnapshot(spark: SparkSession, root: String, snapshotId: Long): DataFrame =
-    spark.read.parquet(manifest(spark, root, snapshotId): _*)
+    readFiles(spark, manifest(spark, root, snapshotId))
+
+  /** Parquet read of exact manifest paths. Spark glob-expands read paths,
+    * so glob characters in a path (a root holding `\`, `[` or `*`) are
+    * escaped: each path names one file, never a pattern. */
+  private def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
+    spark.read.parquet(paths.map(_.flatMap(c =>
+      if ("\\{}[]*?".indexOf(c) >= 0) s"\\$c" else c.toString)): _*)
 
   /** Fast append (Iceberg-style): writes ONLY the new rows as data files,
     * then records a new snapshot whose manifest is the parent's file list
@@ -155,10 +156,7 @@ object ImageTable {
       withMetadataLock(root, conf, staleLockMs, lockTimeoutMs) { assertStillHeld =>
         val parent = currentSnapshot(spark, root)
         val snapshotId = parent + 1
-        val parentMeta = graft.util.HadoopIO.readString(
-          s"$root/metadata/v$parent.metadata.json", conf)
-        val parentManifest = ("""\{"path":"""" + JsonStrChar + """+","size":\d+\}""").r
-          .findAllIn(parentMeta).toSeq
+        val parentManifest = readMetadata(root, parent, conf).manifest
         assertStillHeld()
         commitMetadata(root, snapshotId, Some(parent), df.schema,
           parentManifest ++ newEntries, conf)
@@ -323,8 +321,7 @@ object ImageTable {
     val all = listSnapshots(root, conf)
     val keep = all.sorted.takeRight(keepLast).toSet + current
     val expire = all.filterNot(keep)
-    expire.foreach(id =>
-      graft.util.HadoopIO.delete(s"$root/metadata/v$id.metadata.json", conf))
+    expire.foreach(id => graft.util.HadoopIO.delete(metadataPath(root, id), conf))
     expire
   }
 
@@ -423,7 +420,7 @@ object ImageTable {
     if (delta.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         snapshotSchema(spark, root, toSnapshot))
-    else spark.read.parquet(delta: _*)
+    else readFiles(spark, delta)
   }
 
   /** The schema recorded in a snapshot's metadata JSON. The empty-delta
@@ -433,16 +430,8 @@ object ImageTable {
     * already embeds the schema. */
   private def snapshotSchema(spark: SparkSession, root: String,
       snapshotId: Long): org.apache.spark.sql.types.StructType = {
-    val meta = graft.util.HadoopIO.readString(
-      s"$root/metadata/v$snapshotId.metadata.json", spark.sessionState.newHadoopConf())
-    // the schema value is a JSON string with \\ and \" escaped at commit
-    // time, so a raw '"' cannot appear inside the match
-    val escaped = """"schema":"((?:[^"\\]|\\.)*)"""".r.findFirstMatchIn(meta)
-      .getOrElse(throw new IllegalStateException(
-        s"no schema field in v$snapshotId.metadata.json under $root"))
-      .group(1)
-    val json = escaped.replace("\\\"", "\"").replace("\\\\", "\\")
-    val st = org.apache.spark.sql.types.DataType.fromJson(json)
+    val st = org.apache.spark.sql.types.DataType.fromJson(
+      readMetadata(root, snapshotId, spark.sessionState.newHadoopConf()).schema)
       .asInstanceOf[org.apache.spark.sql.types.StructType]
     // parquet read-back reports every column nullable; the recorded schema
     // keeps the writer's nullable=false flags — align to the read-back

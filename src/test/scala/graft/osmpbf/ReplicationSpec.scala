@@ -169,7 +169,25 @@ class ReplicationSpec extends AnyFunSuite with SparkTestBase {
     paths.foreach { p =>
       val off = OsmPbfOffset(p)
       assert(OsmPbfOffset.fromJson(off.json()) === off, s"path <$p>")
+      // valid for any JSON reader, not only fromJson
+      assert(new com.fasterxml.jackson.databind.ObjectMapper().readTree(off.json())
+        .get("lastFile").asText() === p)
     }
+    // same bytes as before for a plain path: Spark compares offsets by json()
+    assert(OsmPbfOffset("/d/000000001.osm.pbf").json() === """{"lastFile":"/d/000000001.osm.pbf"}""")
+    // offsets already committed by the string-built writer (only `\` and
+    // `"` escaped, so a tab stayed raw) keep resuming the stream
+    Seq(
+      """{"lastFile":""}""" -> "",
+      """{"lastFile":"/plain/000000001.osm.pbf"}""" -> "/plain/000000001.osm.pbf",
+      """{"lastFile":"C:\\diffs\\000000042.osm.pbf"}""" -> """C:\diffs\000000042.osm.pbf""",
+      """{"lastFile":"weird\\\"quote"}""" -> """weird\"quote""",
+      "{\"lastFile\":\"tab\there\"}" -> "tab\there"
+    ).foreach { case (json, p) =>
+      assert(OsmPbfOffset.fromJson(json) === OsmPbfOffset(p), json)
+    }
+    intercept[IllegalArgumentException](OsmPbfOffset.fromJson("""{"lastFile":1"""))
+    intercept[IllegalArgumentException](OsmPbfOffset.fromJson("{}"))
   }
 
   test("a foreign file in the replication dir neither wedges the stream nor leaks rows") {

@@ -195,6 +195,46 @@ class SourceSpec extends AnyFunSuite with SparkTestBase {
     assert(rewritten.forall(_.nodeCount < 0), "stale sidecar must not validate")
   }
 
+  test("a stats sidecar in the previous on-disk format still merges into the scan") {
+    import graft.osmpbf.codec.{FrameScanner, PbfWriter}
+    val fPath = s"$tmpDir/foreign_oldsidecar.osm.pbf"
+    val w = new PbfWriter(new java.io.BufferedOutputStream(
+      new java.io.FileOutputStream(fPath), 1 << 16), elementsPerBlock = 10,
+      withStats = false)
+    w.writeHeader(graft.osmpbf.model.HeaderMeta(
+      Seq("OsmSchema-V0.6", "DenseNodes"), Nil, "foreign", "synthetic",
+      None, None, None, None))
+    world.nodes.take(20).foreach(w.addNode)
+    w.close()
+    val conf = spark.sessionState.newHadoopConf()
+    val scan0 = FrameScanner.scan(fPath, conf)
+    val Seq(a, b) = scan0.blobs.filter(_.blobType == "OSMData")
+    val (lo, hi) = (world.nodes.take(10).map(_.id).min, world.nodes.take(10).map(_.id).max)
+    // the string-built writer's bytes: one entry with an id range, one
+    // without (a blob it counted no elements in carries none)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(FrameScanner.sidecarPath(fPath)),
+      s"""{"file_size":${scan0.fileSize},"blobs":[{"offset":${a.headerOffset},"nodes":10,""" +
+        s""""ways":0,"relations":0,"changesets":0,"min_id":$lo,"max_id":$hi},""" +
+        s"""{"offset":${b.headerOffset},"nodes":0,"ways":0,"relations":0,"changesets":0}]}""")
+    val Seq(a2, b2) = FrameScanner.scan(fPath, conf).blobs.filter(_.blobType == "OSMData")
+    assert((a2.nodeCount, a2.wayCount, a2.minId, a2.maxId) === ((10L, 0L, lo, hi)))
+    assert((b2.nodeCount, b2.minId, b2.maxId) === ((0L, Long.MinValue, Long.MaxValue)))
+    // what the stats pass writes now is strict JSON and merges the same way
+    new java.io.File(FrameScanner.sidecarPath(fPath)).delete()
+    graft.osmpbf.source.OsmStats.buildBlobStats(spark, fPath).collect()
+    val side = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      java.nio.file.Files.readString(java.nio.file.Paths.get(FrameScanner.sidecarPath(fPath))))
+    assert(side.get("file_size").asLong() === scan0.fileSize && side.get("blobs").size() === 2)
+    val Seq(a3, b3) = FrameScanner.scan(fPath, conf).blobs.filter(_.blobType == "OSMData")
+    assert((a3.nodeCount, a3.minId, a3.maxId) === ((10L, lo, hi)))
+    assert(b3.nodeCount === 10L)
+    // a sidecar that does not parse is ignored, never a failed scan
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(FrameScanner.sidecarPath(fPath)),
+      s"""{"file_size":${scan0.fileSize},"blobs":[{"offset":""")
+    assert(FrameScanner.scan(fPath, conf).blobs.filter(_.blobType == "OSMData")
+      .forall(_.nodeCount < 0))
+  }
+
   test("multiple files in a directory read as one table") {
     val dir = java.nio.file.Files.createTempDirectory("multi").toString
     val w1 = OsmWorld.generate(seed = 1, nClusters = 1, nodesPerCluster = 30)

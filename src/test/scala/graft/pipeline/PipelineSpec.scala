@@ -197,6 +197,67 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     // the round-3 bug: contains("\"bucket_res\":1") matched the 12 marker
     assert(!CheckpointedRunner.isDone(outDir, 5L, "L", 1, conf))
     assert(!CheckpointedRunner.isDone(outDir, 5L, "other", 12, conf))
+    // the string-built writer embedded Main's lineage raw, so a tab in the
+    // PBF path sat unescaped inside the marker; it must still validate
+    val tabbed = "images-snapshot=1 pbf=/in/a\tb.osm.pbf z=10 res=12"
+    graft.util.HadoopIO.writeString(CheckpointedRunner.markerPath(outDir, 6L),
+      s"""{"bucket":6,"complete":true,"rows":3,"wall_ms":9,
+        |"lineage":"$tabbed","bucket_res":2}""".stripMargin, conf)
+    assert(CheckpointedRunner.isDone(outDir, 6L, tabbed, 2, conf))
+    assert(!CheckpointedRunner.isDone(outDir, 6L, "images-snapshot=1 pbf=/in/a", 2, conf))
+    // a marker that does not parse means "not done", never a crash
+    graft.util.HadoopIO.writeString(CheckpointedRunner.markerPath(outDir, 7L),
+      """{"bucket":7,"complete":true,"rows":""", conf)
+    assert(!CheckpointedRunner.isDone(outDir, 7L, "L", 12, conf))
+  }
+
+  test("an output directory in the previous on-disk format resumes without re-staging") {
+    val conf = spark.sessionState.newHadoopConf()
+    val outDir = s"$tmpDir/ckpt-oldformat"
+    val tiled = Tiles.assignPoints(images, 10)
+    val work = (df: org.apache.spark.sql.DataFrame) =>
+      df.groupBy("tile", "tile_z", "tile_x", "tile_y").agg(count(lit(1)).as("n"))
+    val lineage = "images-snapshot=3 pbf=/in/a\tb.osm.pbf z=10 res=12"
+    val r1 = CheckpointedRunner.run(spark, tiled, outDir, work, bucketRes = 2, lineage = lineage)
+    // replace every stamp and marker with the exact bytes the string-built
+    // writer produced (raw lineage, newline before "lineage")
+    graft.util.HadoopIO.writeString(s"$outDir/_staged_lineage.json",
+      s"""{"lineage":"$lineage","bucket_res":2}""", conf)
+    r1.foreach { r =>
+      graft.util.HadoopIO.writeString(CheckpointedRunner.markerPath(outDir, r.bucket),
+        s"""{"bucket":${r.bucket},"complete":true,"rows":${r.rows},"wall_ms":${r.wallMs},
+          |"lineage":"$lineage","bucket_res":2}""".stripMargin, conf)
+    }
+    val staged = new java.io.File(s"$outDir/staged_input/_SUCCESS")
+    val stagedAt = staged.lastModified()
+    val r2 = CheckpointedRunner.run(spark, tiled, outDir, work, bucketRes = 2, lineage = lineage)
+    assert(r2.nonEmpty && r2.forall(_.skipped), "every old-format marker must validate")
+    assert(r2.map(r => r.bucket -> r.rows) === r1.map(r => r.bucket -> r.rows))
+    assert(staged.exists() && staged.lastModified() === stagedAt, "the input was re-staged")
+    assert(CheckpointedRunner.readOutput(spark, outDir).agg(sum("n")).collect().head.getLong(0) === 500L)
+  }
+
+  test("a lineage holding quote, backslash and newline: strict-JSON state, full resume") {
+    val outDir = s"$tmpDir/ckpt-hostile-lineage"
+    val tiled = Tiles.assignPoints(images, 10)
+    val work = (df: org.apache.spark.sql.DataFrame) =>
+      df.groupBy("tile", "tile_z", "tile_x", "tile_y").agg(count(lit(1)).as("n"))
+    // Main embeds the raw PBF path in its lineage
+    val lineage = "images-snapshot=1 pbf=/in/we\"ird\\dir\nx.osm.pbf z=10 res=12"
+    val r1 = CheckpointedRunner.run(spark, tiled, outDir, work, bucketRes = 2, lineage = lineage)
+    assert(r1.nonEmpty && r1.forall(!_.skipped))
+    val strict = new com.fasterxml.jackson.databind.ObjectMapper()
+    def parse(f: java.io.File) = strict.readTree(java.nio.file.Files.readString(f.toPath))
+    val markers = new java.io.File(s"$outDir/_ckpt").listFiles().filter(_.getName.endsWith(".json"))
+    assert(markers.length === r1.size)
+    (markers.toSeq ++ Seq("_pipeline_metrics.json", "_staged_lineage.json")
+        .map(n => new java.io.File(outDir, n))).foreach { f =>
+      assert(parse(f).get("lineage").asText() === lineage, f.getName)
+    }
+    val r2 = CheckpointedRunner.run(spark, tiled, outDir, work, bucketRes = 2, lineage = lineage)
+    assert(r2.forall(_.skipped))
+    assert(parse(new java.io.File(outDir, "_pipeline_metrics.json")).get("buckets_skipped")
+      .asInt() === r1.size)
   }
 
   test("same lineage, new bucket_res: input re-stages at the new resolution") {

@@ -225,6 +225,33 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     assert(got === expected)
   }
 
+  test("J4 kNN equals brute force on a grid its disk wraps around (2·radius+1 > 2^res)") {
+    import spark.implicits._
+    // 5 POIs spread over the 16 cells of res 2: the adaptive first radius is
+    // ((sqrt(4·k / (5/16)) - 1) / 2).toInt = 2, and 2·2+1 = 5 > 4 columns,
+    // so both rounds (radius 2, then 4) take the per-row disk UDF
+    val pois = Seq((1L, -170.0, 60.0), (2L, -100.0, -30.0), (3L, 10.0, 10.0),
+      (4L, 80.0, 50.0), (5L, 150.0, -60.0)).toDF("poi_id", "lon", "lat")
+    val pts = (0 until 60).map { i =>
+      (i.toLong, -177.0 + 6.0 * i, 80.0 * math.sin(i * 0.7))
+    }.toDF("pt_id", "lon", "lat")
+    val k = 3
+    val got = SpatialJoin.knnJoin(pts, pois, k = k, res = 2, maxRadius = 4)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
+    // every point retires inside the rings: a disk that missed cells would
+    // leave stragglers for the exact fallback (or retire them wrongly)
+    assert(SpatialJoin.lastKnnStragglerCount === 0L)
+    val poiLocal = pois.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+    val expected = pts.collect().flatMap { r =>
+      val (id, lon, lat) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
+      poiLocal.map { case (pid, plon, plat) =>
+        (pid, graft.spatial.cell.CellMath.haversineMeters(lon, lat, plon, plat))
+      }.sortBy(t => (t._2, t._1)).take(k).zipWithIndex
+        .map { case ((pid, _), i) => (id, pid, i + 1) }
+    }.toSet
+    assert(got === expected)
+  }
+
   test("J4 kNN straggler fallback is measured (observe + accessor), result still exact") {
     import spark.implicits._
     val pts = mkPoints(80)

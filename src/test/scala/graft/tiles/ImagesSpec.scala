@@ -6,6 +6,8 @@ import graft.fixtures.OsmWorld
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Paths}
+
 class ImagesSpec extends AnyFunSuite with SparkTestBase {
 
   private lazy val centers = OsmWorld.generate(seed = 42, nClusters = 4, nodesPerCluster = 10).clusterCenters
@@ -94,10 +96,10 @@ class ImagesSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("manifest survives a table root containing a JSON-special character") {
-    // a quote in the directory name would corrupt un-escaped manifest
-    // entries ({"path":"...".."}); escape-on-write / unescape-on-read must
+    // a quote, backslash or tab in the directory name would corrupt
+    // un-escaped manifest entries ({"path":"...".."}); the metadata must
     // round-trip write, append, time travel and incremental read
-    val root = s"""$tmpDir/image"table"quoted"""
+    val root = s"""$tmpDir/image"table\\back\ttab"quoted"""
     val base = Images.synthesize(spark, 30, centers, 2)
     ImageTable.write(base, root, snapshotId = 1L)
     val extra = Images.synthesize(spark, 40, centers, 2)
@@ -111,8 +113,61 @@ class ImagesSpec extends AnyFunSuite with SparkTestBase {
     val m2 = ImageTable.manifest(spark, root, snap2)
     assert(m2.nonEmpty)
     m2.foreach { p =>
-      assert(p.contains("""image"table"quoted""") && !p.contains("\\\""), p)
+      assert(p.contains("image\"table\\back\ttab\"quoted") && !p.contains("\\\""), p)
     }
+    // valid for any JSON reader: a strict mapper, no control-char allowance
+    val metaDir = new java.io.File(s"$root/metadata")
+    val metas = metaDir.listFiles().filter(_.getName.matches("v\\d+\\.metadata\\.json"))
+    assert(metas.map(_.getName).toSet === Set("v1.metadata.json", "v2.metadata.json"))
+    metas.foreach { f =>
+      val tree = new com.fasterxml.jackson.databind.ObjectMapper()
+        .readTree(java.nio.file.Files.readString(f.toPath))
+      assert(tree.get("manifest").size() > 0, f.getName)
+    }
+  }
+
+  test("metadata in the previous on-disk format still loads, reads and appends") {
+    import spark.implicits._
+    // the exact bytes the string-built writer produced: newlines after the
+    // header and schema lines, only `"` and `\` escaped (so a tab in the
+    // root sat raw inside the path strings), the schema as an escaped string
+    val root = s"$tmpDir/old\tformat"
+    def part(dir: String, df: org.apache.spark.sql.DataFrame): (String, Long) = {
+      df.coalesce(1).write.parquet(s"$root/data/$dir")
+      val f = new java.io.File(s"$root/data/$dir").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      ("file:" + f.getPath, f.length())
+    }
+    val (p1, s1) = part("snap=1", (0L until 5L).map(i => (i, s"n$i")).toDF("id", "name"))
+    val (p2, s2) = part("txn-0", (5L until 8L).map(i => (i, s"n$i")).toDF("id", "name"))
+    val schema = """{\"type\":\"struct\",\"fields\":[{\"name\":\"id\",\"type\":\"long\",""" +
+      """\"nullable\":false,\"metadata\":{}},{\"name\":\"name\",\"type\":\"string\",""" +
+      """\"nullable\":true,\"metadata\":{}}]}"""
+    val v1 = s"""{"format-version":2,"snapshot-id":1,
+      |"schema":"$schema",
+      |"manifest":[{"path":"$p1","size":$s1}],
+      |"written-at":"deterministic"}""".stripMargin
+    val v2 = s"""{"format-version":2,"snapshot-id":2,"parent-snapshot-id":1,
+      |"schema":"$schema",
+      |"manifest":[{"path":"$p1","size":$s1},{"path":"$p2","size":$s2}],
+      |"written-at":"deterministic"}""".stripMargin
+    assert(p1.contains("\t") && v2.contains("\t"), "the raw tab is the point")
+    Files.createDirectories(Paths.get(s"$root/metadata"))
+    Files.writeString(Paths.get(s"$root/metadata/v1.metadata.json"), v1)
+    Files.writeString(Paths.get(s"$root/metadata/v2.metadata.json"), v2)
+    Files.writeString(Paths.get(s"$root/metadata/current"), "2")
+
+    assert(ImageTable.manifest(spark, root, 2L) === Seq(p1, p2))
+    assert(ImageTable.load(spark, root).count() === 8)
+    assert(ImageTable.loadSnapshot(spark, root, 1L).count() === 5)
+    assert(ImageTable.readIncremental(spark, root, 1L, 2L).count() === 3)
+    val none = ImageTable.readIncremental(spark, root, 2L, 2L)
+    assert(none.count() === 0 && none.schema.fieldNames.toSeq === Seq("id", "name"))
+    // an append on top of the old-format parent keeps its entries verbatim
+    val snap3 = ImageTable.append((8L until 10L).map(i => (i, s"n$i")).toDF("id", "name"), root)
+    assert(snap3 === 3L)
+    assert(ImageTable.manifest(spark, root, 3L).take(2) === Seq(p1, p2))
+    assert(ImageTable.load(spark, root).count() === 10)
   }
 
   test("concurrent appends serialize: both commit, no rows lost") {
