@@ -167,9 +167,9 @@ object CellMath {
     val R = 6371000.0
     val dLat = rad(lat2 - lat1)
     val dLon = rad(lon2 - lon1)
-    val a = math.sin(dLat / 2) * math.sin(dLat / 2) +
-      math.cos(rad(lat1)) * math.cos(rad(lat2)) *
-        math.sin(dLon / 2) * math.sin(dLon / 2)
+    val sLat = math.sin(dLat / 2)
+    val sLon = math.sin(dLon / 2)
+    val a = sLat * sLat + math.cos(rad(lat1)) * math.cos(rad(lat2)) * sLon * sLon
     2 * R * math.asin(math.min(1.0, math.sqrt(a)))
   }
 }

@@ -206,15 +206,14 @@ object SpatialJoin {
     // except the result's own blocks (CheckpointTracker scaladoc).
     val ckpt = new graft.util.CheckpointTracker(spark)
     import ckpt.track
-    // fail on the driver, not as per-row executor exceptions inside the
-    // aggregate (TopKAgg's empty-buffer fast path)
-    require(k >= 1, s"k must be >= 1, got $k")
+    // fail on the driver, before any job runs: k sizes every group's
+    // fixed-width top-k buffer (2k+1 slots), so it is bounded above too
+    KnnTopK.requireK(k)
     // the finally below releases the POI cache and this call's checkpoint
     // blocks on EVERY exit — a mid-loop task failure would otherwise leave
     // them pinned for the session lifetime (the round-1 leak)
     var outJ: DataFrame = null
     val diskUdf = udf((cell: Long, r: Int) => CellMath.disk(cell, r))
-    val topkUdaf = udaf(new TopKAgg(k))
     // rows with null coordinates cannot be placed in a cell — dropped here;
     // the cell/disk UDFs take primitive params, so a null would otherwise
     // be silently coerced to 0.0 and join at (0, 0) in the Gulf of Guinea
@@ -289,7 +288,7 @@ object SpatialJoin {
         .select(col("pt_id"), col("lon"), col("lat"), col("cell"),
           col("dist_m"), col("poi_id"))
       // One synthetic keep-alive row per active point (null candidate,
-      // skipped by TopKAgg.reduce): the inner probe join alone loses points
+      // skipped by KnnTopK.update): the inner probe join alone loses points
       // whose disk matched nothing, which round-5 recovered with a per-round
       // anti-join + a SECOND full checkpoint of the shrunken active set.
       // With every point guaranteed a group, the next-active set is a
@@ -299,15 +298,15 @@ object SpatialJoin {
         lit(null).cast("double").as("dist_m"), lit(null).cast("long").as("poi_id"))
       // Bounded top-k aggregate instead of a window rank: partial
       // aggregation keeps ≤ k candidates per point map-side, so the shuffle
-      // carries O(k·points) rows, not every candidate (TopKAgg scaladoc).
-      // The aggregator also dedups poi ids (lon-wrap can alias disk cells).
+      // carries O(k·points) rows, not every candidate (KnnTopK scaladoc).
+      // The aggregate also dedups poi ids (lon-wrap can alias disk cells).
       // localCheckpoint: each round materializes once — without it the
       // lazily-chained rounds re-execute every prior round's join whenever
       // the final union materializes (memory + time blow-up). lon/lat/cell
       // ride through the aggregation (identical on every row of a point)
       // so the surviving points need no join back to `active`.
       val grouped = track(cand.unionByName(keepAlive).groupBy("pt_id")
-        .agg(topkUdaf(col("dist_m"), col("poi_id")).as("topk"),
+        .agg(KnnTopK.topk(col("dist_m"), col("poi_id"), k).as("topk"),
           first(col("lon")).as("lon"), first(col("lat")).as("lat"),
           first(col("cell")).as("cell"))
         .localCheckpoint())
@@ -377,7 +376,7 @@ object SpatialJoin {
         .crossJoin(poiCells.drop("cell"))
         .withColumn("dist_m", F.haversine_m(col("lon"), col("lat"), col("poi_lon"), col("poi_lat")))
         .groupBy("pt_id")
-        .agg(topkUdaf(col("dist_m"), col("poi_id")).as("topk"))
+        .agg(KnnTopK.topk(col("dist_m"), col("poi_id"), k).as("topk"))
         .select(col("pt_id"), posexplode(col("topk")).as(Seq("pos", "c")))
         .select(col("pt_id"), col("c.id").as("poi_id"), col("c.dist").as("dist_m"),
           (col("pos") + 1).cast("int").as("rank"))

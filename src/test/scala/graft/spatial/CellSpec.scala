@@ -114,6 +114,35 @@ class CellSpec extends AnyFunSuite with GenSupport with SparkTestBase {
     assert(CellMath.haversineMeters(5, 5, 5, 5) === 0.0)
   }
 
+  test("haversine is bit-identical to the two-sines-per-term formula (kNN dist_m and oracle hashes)") {
+    // the formula as written before each sine was computed once; dist_m
+    // feeds kNN ranks and the oracle hashes, so not one ulp may move
+    def rad(d: Double): Double = d * (math.Pi / 180.0)
+    def reference(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
+      val dLat = rad(lat2 - lat1)
+      val dLon = rad(lon2 - lon1)
+      val a = math.sin(dLat / 2) * math.sin(dLat / 2) +
+        math.cos(rad(lat1)) * math.cos(rad(lat2)) *
+          math.sin(dLon / 2) * math.sin(dLon / 2)
+      2 * 6371000.0 * math.asin(math.min(1.0, math.sqrt(a)))
+    }
+    val rnd = new scala.util.Random(20261017L)
+    val random = Seq.fill(20000)((rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90,
+      rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90))
+    val edges = for {
+      (lon1, lat1) <- Seq((0.0, 90.0), (0.0, -90.0), (180.0, 0.0), (-180.0, 0.0),
+        (179.9999, 45.0), (12.5, 41.9))
+      (lon2, lat2) <- Seq((0.0, 90.0), (135.0, -90.0), (-180.0, 0.0), (-179.9999, 45.0),
+        (-167.5, -41.9), (lon1 + 180.0, -lat1), (lon1 - 180.0, -lat1), (lon1, lat1))
+    } yield (lon1, lat1, lon2, lat2)
+    for ((lon1, lat1, lon2, lat2) <- random ++ edges) {
+      val got = CellMath.haversineMeters(lon1, lat1, lon2, lat2)
+      val want = reference(lon1, lat1, lon2, lat2)
+      assert(java.lang.Double.doubleToLongBits(got) == java.lang.Double.doubleToLongBits(want),
+        s"($lon1, $lat1) → ($lon2, $lat2): $got vs $want")
+    }
+  }
+
   test("Catalyst expressions agree with CellMath and stay in codegen") {
     import spark.implicits._
     // derive lon/lat from range so the plan is not constant-folded into a

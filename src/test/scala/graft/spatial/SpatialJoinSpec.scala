@@ -5,10 +5,16 @@ import graft.fixtures.OsmWorld
 import graft.osmpbf.source.OsmPbf
 import graft.spatial.cell.GeomEval
 import graft.spatial.geom.Assembly
-import graft.spatial.join.{KnnCand, KnnCandIn, SpatialJoin, TopKAgg}
+import graft.spatial.join.{KnnTopK, SpatialJoin}
 import graft.tiles.{Images, Tiles}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, SpecificInternalRow}
+import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
+import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -90,20 +96,27 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
 
   test("J4 hostile inputs: NaN distances rank last, null coords drop, k and res validated") {
     import spark.implicits._
-    // TopKAgg: raw </== comparisons are always false against NaN, which
+    // KnnTopK: raw </== comparisons are always false against NaN, which
     // used to prepend a NaN candidate at rank 1 — the window oracle sorts
     // NaN last
-    val agg = new TopKAgg(2)
-    val buf = Seq(KnnCandIn(Double.NaN, 1L), KnnCandIn(5.0, 2L), KnnCandIn(7.0, 3L))
-      .foldLeft(agg.zero)(agg.reduce)
-    assert(buf.map(_.id) === Seq(2L, 3L), s"NaN outranked real distances: $buf")
+    val agg = topkOf(2)
+    val buf = topkBuffer(agg, (Double.NaN, 1L), (5.0, 2L), (7.0, 3L))
+    assert(topkRows(agg, buf).map(_._2) === Seq(2L, 3L), s"NaN outranked real distances: ${topkRows(agg, buf)}")
     // round-6: null candidates (the loop's keep-alive rows / unmatched
     // left probes) are skipped, never inserted
-    assert(agg.reduce(buf, KnnCandIn(null, null)) === buf)
-    assert(agg.reduce(agg.zero, KnnCandIn(null, null)) === agg.zero)
-    assert(agg.merge(Seq(KnnCand(Double.NaN, 9L)), Seq(KnnCand(1.0, 2L)))
-      .head.id === 2L)
-    intercept[IllegalArgumentException](new TopKAgg(0))
+    val before = topkRows(agg, buf)
+    agg.update(buf, InternalRow(null, null))
+    assert(topkRows(agg, buf) === before)
+    val partial = topkBuffer(agg, (5.0, 2L))
+    agg.update(partial, InternalRow(null, null))
+    assert(topkRows(agg, partial) === Seq((5.0, 2L)))
+    val empty = topkBuffer(agg)
+    agg.update(empty, InternalRow(null, null))
+    assert(topkRows(agg, empty) === Seq.empty)
+    val merged = topkBuffer(agg, (Double.NaN, 9L))
+    agg.merge(merged, topkBuffer(agg, (1.0, 2L)))
+    assert(topkRows(agg, merged).head._2 === 2L)
+    intercept[IllegalArgumentException](topkOf(0))
     intercept[IllegalArgumentException](
       SpatialJoin.knnJoin(Seq((1L, 0.0, 0.0)).toDF("pt_id", "lon", "lat"),
         Seq((1L, 0.0, 0.0)).toDF("poi_id", "lon", "lat"), k = 0))
@@ -121,6 +134,88 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     intercept[IllegalArgumentException](
       SpatialJoin.pipJoin(pts.where(col("lon").isNotNull), polys, res = 12,
         preparedCells = Some(pc)))
+  }
+
+  // KnnTopK driven directly: input rows are (dist, id), buffers are plain
+  // mutable rows laid out as the aggregate's buffer schema
+  private def topkOf(k: Int): KnnTopK =
+    KnnTopK(BoundReference(0, DoubleType, nullable = true), BoundReference(1, LongType, nullable = true), k)
+
+  private def topkBuffer(agg: KnnTopK, cands: (Double, Long)*): InternalRow = {
+    val b = new SpecificInternalRow(agg.aggBufferAttributes.map(_.dataType))
+    agg.initialize(b)
+    cands.foreach { case (d, i) => agg.update(b, InternalRow(d, i)) }
+    b
+  }
+
+  private def topkRows(agg: KnnTopK, b: InternalRow): Seq[(Double, Long)] = {
+    val a = agg.eval(b).asInstanceOf[ArrayData]
+    (0 until a.numElements()).map { j => val s = a.getStruct(j, 2); (s.getDouble(0), s.getLong(1)) }
+  }
+
+  test("J4 k above KnnTopK.MaxK is rejected on the driver") {
+    import spark.implicits._
+    assert(topkOf(KnnTopK.MaxK).k === KnnTopK.MaxK)
+    val e = intercept[IllegalArgumentException](topkOf(KnnTopK.MaxK + 1))
+    assert(e.getMessage.contains(s"[1, ${KnnTopK.MaxK}]"), e.getMessage)
+    intercept[IllegalArgumentException](
+      SpatialJoin.knnJoin(Seq((1L, 0.0, 0.0)).toDF("pt_id", "lon", "lat"),
+        Seq((1L, 0.0, 0.0)).toDF("poi_id", "lon", "lat"), k = KnnTopK.MaxK + 1))
+  }
+
+  test("J4 KnnTopK through groupBy equals a sort-dedup-take reference and plans as HashAggregate") {
+    import spark.implicits._
+    val k = 5
+    // bit-equality, so NaN == NaN and -Inf/+Inf compare exactly
+    def bits(rows: Seq[(Double, Long)]): Seq[(Long, Long)] =
+      rows.map { case (d, i) => (java.lang.Double.doubleToLongBits(d), i) }
+    for (seed <- Seq(1L, 2L, 3L)) {
+      val rnd = new scala.util.Random(seed)
+      // a few distinct values so different ids tie; every (group, id) has
+      // ONE distance, as a (point, POI) pair does, so duplicates of an id
+      // (which land in several partitions) carry the same distance
+      val values = Array(0.0, 1.0, 1.0, 2.5, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+      val rows = (0 until 60).flatMap { g =>
+        val distOf = (0 until 12).map(_ => values(rnd.nextInt(values.length)))
+        // g % 10 == 0: fewer candidates than k; g % 10 == 1: only null rows
+        val nCands = if (g % 10 == 0) rnd.nextInt(k) else if (g % 10 == 1) 0 else rnd.nextInt(40)
+        val cands = Seq.fill(nCands) {
+          val id = rnd.nextInt(12)
+          (g, Option(distOf(id)), Option(id.toLong))
+        }
+        val nulls = Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(3) match {
+          case 0 => (g, Option.empty[Double], Option.empty[Long])
+          case 1 => (g, Option.empty[Double], Option(rnd.nextInt(12).toLong))
+          case _ => (g, Option(values(rnd.nextInt(values.length))), Option.empty[Long])
+        })
+        cands ++ nulls
+      }
+      val shuffled = rnd.shuffle(rows)
+      val expected = shuffled.groupBy(_._1).map { case (g, rs) =>
+        g -> bits(rs.collect { case (_, Some(d), Some(i)) => (d, i) }.distinctBy(_._2)
+          .sortWith { case ((d1, i1), (d2, i2)) =>
+            val c = java.lang.Double.compare(d1, d2)
+            c < 0 || (c == 0 && i1 < i2)
+          }.take(k))
+      }
+      // first() rides along as lon/lat/cell do in knnJoin's round aggregate
+      val df = shuffled.toDF("g", "dist", "id").repartition(6)
+        .groupBy("g").agg(KnnTopK.topk(col("dist"), col("id"), k).as("topk"), first(col("g")).as("g1"))
+      val got = df.collect().map { r =>
+        r.getInt(0) -> bits(r.getSeq[org.apache.spark.sql.Row](1).map(c => (c.getDouble(0), c.getLong(1))))
+      }.toMap
+      assert(got.keySet === expected.keySet, s"seed $seed")
+      val wrong = expected.keys.toSeq.sorted.filter(g => got(g) != expected(g))
+        .map(g => s"group $g: got ${got(g)}, want ${expected(g)}")
+      assert(wrong.isEmpty, s"seed $seed: ${wrong.take(3).mkString("; ")}")
+      val aggs = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
+        case a: HashAggregateExec => a
+        case a: ObjectHashAggregateExec => a
+        case a: SortAggregateExec => a
+      }
+      assert(aggs.nonEmpty && aggs.forall(_.isInstanceOf[HashAggregateExec]),
+        s"top-k must plan as HashAggregateExec only:\n${df.queryExecution.executedPlan}")
+    }
   }
 
   test("J2 super-relation (relation-of-relations) resolves to depth 2 with all rings") {
