@@ -116,10 +116,7 @@ object SparkEntry {
         .select("lon", "lat").distinct()
         .withColumn("pt_id", concat(round(col("lon") * 1000).cast("long"),
           lit("_"), round(col("lat") * 1000).cast("long")))
-      // res 8 measured fastest (KnnProbe: smaller first-round candidate
-      // join beats fewer rounds; result set is res-invariant by the
-      // retirement-bound construction)
-      SpatialJoin.knnJoin(pts, partPois(s, dir), k = 2, res = 8, maxRadius = 16)
+      SpatialJoin.knnJoin(pts, partPois(s, dir), k = 2)
         .select(col("pt_id"), col("poi_id"), col("rank"))
     }),
     "q12_zorder_sort" -> ((s, dir) => {

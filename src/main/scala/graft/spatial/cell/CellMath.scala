@@ -72,7 +72,8 @@ object CellMath {
     val r = resOf(cell); val n = 1 << r
     val cx = xOf(cell); val cy = yOf(cell)
     if (k == 0) return Array(cell)
-    val out = new scala.collection.mutable.ArrayBuffer[Long](8 * k)
+    val out = new Array[Long](8 * k)
+    var i = 0
     var dx = -k
     while (dx <= k) {
       var dy = -k
@@ -82,19 +83,16 @@ object CellMath {
           if (y >= 0 && y < n) {
             var x = (cx + dx) % n
             if (x < 0) x += n
-            out += pack(r, x, y)
+            out(i) = pack(r, x, y)
+            i += 1
           }
         }
         dy += 1
       }
       dx += 1
     }
-    out.toArray
+    if (i == out.length) out else java.util.Arrays.copyOf(out, i)
   }
-
-  /** All cells within Chebyshev distance k (disk = union of rings 0..k). */
-  def disk(cell: Long, k: Int): Array[Long] =
-    (0 to k).flatMap(ring(cell, _)).toArray
 
   /** Minimal cover of a lon/lat bbox at resolution res. Handles the
     * antimeridian by splitting the lon interval. Each index is clamped on
@@ -163,13 +161,26 @@ object CellMath {
   @inline private def rad(d: Double): Double = d * (math.Pi / 180.0)
 
   /** Great-circle distance in meters (haversine; C12-adjacent util). */
-  def haversineMeters(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double = {
-    val R = 6371000.0
-    val dLat = rad(lat2 - lat1)
-    val dLon = rad(lon2 - lon1)
-    val sLat = math.sin(dLat / 2)
-    val sLon = math.sin(dLon / 2)
-    val a = sLat * sLat + math.cos(rad(lat1)) * math.cos(rad(lat2)) * sLon * sLon
-    2 * R * math.asin(math.min(1.0, math.sqrt(a)))
+  def haversineMeters(lon1: Double, lat1: Double, lon2: Double, lat2: Double): Double =
+    metersOf(haversineTerm(lon1, lat1, cosLat(lat1), lon2, lat2, cosLat(lat2)))
+
+  /** cos(lat), the per-endpoint factor of [[haversineTerm]]; kNN computes it
+    * once per POI. */
+  @inline def cosLat(lat: Double): Double = math.cos(rad(lat))
+
+  /** The haversine term `a` = sin²(Δlat/2) + cos lat1 · cos lat2 · sin²(Δlon/2).
+    * [[metersOf]] is monotone in `a`, so kNN ranks candidates by `a` and
+    * pays the `asin` only for the ones it keeps. */
+  @inline def haversineTerm(lon1: Double, lat1: Double, cosLat1: Double,
+      lon2: Double, lat2: Double, cosLat2: Double): Double = {
+    val sLat = math.sin(rad(lat2 - lat1) / 2)
+    val sLon = math.sin(rad(lon2 - lon1) / 2)
+    sLat * sLat + cosLat1 * cosLat2 * sLon * sLon
   }
+
+  /** Mean Earth radius in meters, the sphere every distance here is on. */
+  final val EarthRadius = 6371000.0
+
+  /** Meters for a haversine term `a`: 2R·asin(min(1, √a)). */
+  @inline def metersOf(a: Double): Double = 2 * EarthRadius * math.asin(math.min(1.0, math.sqrt(a)))
 }

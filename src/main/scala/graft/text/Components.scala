@@ -40,11 +40,10 @@ object Components {
   def connectedComponents(edges: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
       maxIter: Int = 25, loopShufflePartitions: Option[Int] = None): DataFrame = {
     val spark = edges.sparkSession
-    // Same discipline as SpatialJoin.knnJoin: AQE re-plans every round of a
-    // driver-side iterative loop and has been observed (Spark 4.1.2 local)
-    // to stall in withFinalPlanUpdate on checkpointed iterations. The
-    // per-round joins are small and fixed-shape — plan them statically. The
-    // flips live on a CLONED session (same context + cache, isolated conf),
+    // AQE re-plans every round of this driver-side iterative loop and has
+    // been observed (Spark 4.1.2 local) to stall in withFinalPlanUpdate on
+    // checkpointed iterations. The per-round joins are small and
+    // fixed-shape — plan them statically. The flips live on a CLONED session (same context + cache, isolated conf),
     // so a concurrent query on the caller's session never sees them; the
     // result is re-rooted onto the caller's session before returning.
     val loop = SessionBridge.cloneSession(spark)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Leak-free bookkeeping for library functions that `localCheckpoint`
-  * inside a driver loop (kNN join, connected components, LSH top-k): track
+  * inside a driver loop (connected components, LSH top-k): track
   * exactly the RDD ids THIS caller's checkpoints created — read from the
   * checkpointed plans' LogicalRDD leaves, never a global
   * `getPersistentRDDs` diff, which would race a concurrent sibling call

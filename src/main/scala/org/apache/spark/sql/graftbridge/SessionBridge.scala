@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.LogicalRDD
 /** Session/plan bridge for Spark 4's `private[sql]` classic API (same
   * pattern as [[ColumnBridge]]). Two uses in graft:
   *
-  *   - iterative driver loops (kNN join, connected components) run on a
+  *   - iterative driver loops (connected components) run on a
   *     CLONED session so their conf flips (AQE off, loop-sized shuffle
   *     partitions) can never leak into the caller's session — `cloneSession`
   *     copies the full session state (conf, UDFs, temp views) but shares the

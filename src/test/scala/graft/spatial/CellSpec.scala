@@ -59,8 +59,6 @@ class CellSpec extends AnyFunSuite with GenSupport with SparkTestBase {
     val edge = CellMath.cellOf(-179.99, 10.0, 6)
     assert(CellMath.xOf(edge) === 0)
     assert(CellMath.ring(edge, 1).exists(c => CellMath.xOf(c) === (1 << 6) - 1))
-    // disk = rings 0..k
-    assert(CellMath.disk(cell, 2).length === 1 + 8 + 16)
   }
 
   test("coverBBox covers every point cell in the box (property)") {

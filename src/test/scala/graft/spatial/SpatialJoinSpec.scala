@@ -3,18 +3,14 @@ package graft.spatial
 import graft.SparkTestBase
 import graft.fixtures.OsmWorld
 import graft.osmpbf.source.OsmPbf
-import graft.spatial.cell.GeomEval
+import graft.spatial.cell.{CellMath, GeomEval}
 import graft.spatial.geom.Assembly
-import graft.spatial.join.{KnnTopK, SpatialJoin}
+import graft.spatial.join.{KnnIndex, SpatialJoin}
 import graft.tiles.{Images, Tiles}
 
+import org.apache.spark.graftbridge.ListenerBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, SpecificInternalRow}
-import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
-import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, ObjectHashAggregateExec, SortAggregateExec}
-import org.apache.spark.sql.types.{DoubleType, LongType}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -96,27 +92,17 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
 
   test("J4 hostile inputs: NaN distances rank last, null coords drop, k and res validated") {
     import spark.implicits._
-    // KnnTopK: raw </== comparisons are always false against NaN, which
-    // used to prepend a NaN candidate at rank 1 — the window oracle sorts
-    // NaN last
-    val agg = topkOf(2)
-    val buf = topkBuffer(agg, (Double.NaN, 1L), (5.0, 2L), (7.0, 3L))
-    assert(topkRows(agg, buf).map(_._2) === Seq(2L, 3L), s"NaN outranked real distances: ${topkRows(agg, buf)}")
-    // round-6: null candidates (the loop's keep-alive rows / unmatched
-    // left probes) are skipped, never inserted
-    val before = topkRows(agg, buf)
-    agg.update(buf, InternalRow(null, null))
-    assert(topkRows(agg, buf) === before)
-    val partial = topkBuffer(agg, (5.0, 2L))
-    agg.update(partial, InternalRow(null, null))
-    assert(topkRows(agg, partial) === Seq((5.0, 2L)))
-    val empty = topkBuffer(agg)
-    agg.update(empty, InternalRow(null, null))
-    assert(topkRows(agg, empty) === Seq.empty)
-    val merged = topkBuffer(agg, (Double.NaN, 9L))
-    agg.merge(merged, topkBuffer(agg, (1.0, 2L)))
-    assert(topkRows(agg, merged).head._2 === 2L)
-    intercept[IllegalArgumentException](topkOf(0))
+    // the search's buffer: raw </== comparisons are always false against
+    // NaN, which once ranked a NaN candidate first — the window oracle
+    // sorts NaN last
+    assert(topkIds(2, (Double.NaN, 1L), (0.05, 2L), (0.07, 3L)) === Seq(2L, 3L))
+    assert(topkIds(2, (0.05, 2L), (Double.NaN, 1L), (0.07, 3L)) === Seq(2L, 3L))
+    // a tie at the k-th distance goes to the lower id, whatever the order
+    assert(topkIds(2, (0.01, 5L), (0.02, 9L), (0.02, 7L)) === Seq(5L, 7L))
+    assert(topkIds(2, (0.01, 5L), (0.02, 7L), (0.02, 9L)) === Seq(5L, 7L))
+    // antipodal terms (a ≥ 1) clamp to the same distance: still an id tie
+    assert(topkIds(1, (1.0, 4L), (1.0 + 1e-6, 3L)) === Seq(3L))
+    intercept[IllegalArgumentException](new KnnIndex.TopK(0))
     intercept[IllegalArgumentException](
       SpatialJoin.knnJoin(Seq((1L, 0.0, 0.0)).toDF("pt_id", "lon", "lat"),
         Seq((1L, 0.0, 0.0)).toDF("poi_id", "lon", "lat"), k = 0))
@@ -136,86 +122,123 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
         preparedCells = Some(pc)))
   }
 
-  // KnnTopK driven directly: input rows are (dist, id), buffers are plain
-  // mutable rows laid out as the aggregate's buffer schema
-  private def topkOf(k: Int): KnnTopK =
-    KnnTopK(BoundReference(0, DoubleType, nullable = true), BoundReference(1, LongType, nullable = true), k)
-
-  private def topkBuffer(agg: KnnTopK, cands: (Double, Long)*): InternalRow = {
-    val b = new SpecificInternalRow(agg.aggBufferAttributes.map(_.dataType))
-    agg.initialize(b)
-    cands.foreach { case (d, i) => agg.update(b, InternalRow(d, i)) }
-    b
+  // ids kept by the search's top-k buffer after offering (haversine term, id)
+  private def topkIds(k: Int, cands: (Double, Long)*): Seq[Long] = {
+    val top = new KnnIndex.TopK(k)
+    cands.foreach { case (a, i) => top.offer(a, i) }
+    top.result.map(_._1).toSeq
   }
 
-  private def topkRows(agg: KnnTopK, b: InternalRow): Seq[(Double, Long)] = {
-    val a = agg.eval(b).asInstanceOf[ArrayData]
-    (0 until a.numElements()).map { j => val s = a.getStruct(j, 2); (s.getDouble(0), s.getLong(1)) }
-  }
-
-  test("J4 k above KnnTopK.MaxK is rejected on the driver") {
+  test("J4 k above KnnIndex.MaxK is rejected on the driver") {
     import spark.implicits._
-    assert(topkOf(KnnTopK.MaxK).k === KnnTopK.MaxK)
-    val e = intercept[IllegalArgumentException](topkOf(KnnTopK.MaxK + 1))
-    assert(e.getMessage.contains(s"[1, ${KnnTopK.MaxK}]"), e.getMessage)
+    assert(new KnnIndex.TopK(KnnIndex.MaxK).n === 0)
+    val e = intercept[IllegalArgumentException](new KnnIndex.TopK(KnnIndex.MaxK + 1))
+    assert(e.getMessage.contains(s"[1, ${KnnIndex.MaxK}]"), e.getMessage)
     intercept[IllegalArgumentException](
       SpatialJoin.knnJoin(Seq((1L, 0.0, 0.0)).toDF("pt_id", "lon", "lat"),
-        Seq((1L, 0.0, 0.0)).toDF("poi_id", "lon", "lat"), k = KnnTopK.MaxK + 1))
+        Seq((1L, 0.0, 0.0)).toDF("poi_id", "lon", "lat"), k = KnnIndex.MaxK + 1))
   }
 
-  test("J4 KnnTopK through groupBy equals a sort-dedup-take reference and plans as HashAggregate") {
-    import spark.implicits._
-    val k = 5
-    // bit-equality, so NaN == NaN and -Inf/+Inf compare exactly
-    def bits(rows: Seq[(Double, Long)]): Seq[(Long, Long)] =
-      rows.map { case (d, i) => (java.lang.Double.doubleToLongBits(d), i) }
+  test("J4 KnnIndex.nearest equals sort-dedup-take brute force at res 0-11") {
+    // bit-equality, so NaN == NaN
+    def bits(rows: Seq[(Long, Double)]): Seq[(Long, Long)] =
+      rows.map { case (i, d) => (i, java.lang.Double.doubleToLongBits(d)) }
+    def bruteForce(lon: Double, lat: Double, pois: Seq[(Long, Double, Double)], k: Int): Seq[(Long, Double)] =
+      pois.map { case (i, plon, plat) => (i, CellMath.haversineMeters(lon, lat, plon, plat)) }
+        .sortWith { case ((i1, d1), (i2, d2)) =>
+          val c = java.lang.Double.compare(d1, d2)
+          c < 0 || (c == 0 && i1 < i2)
+        }.distinctBy(_._1).take(k)
+    val hostile = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
     for (seed <- Seq(1L, 2L, 3L)) {
       val rnd = new scala.util.Random(seed)
-      // a few distinct values so different ids tie; every (group, id) has
-      // ONE distance, as a (point, POI) pair does, so duplicates of an id
-      // (which land in several partitions) carry the same distance
-      val values = Array(0.0, 1.0, 1.0, 2.5, Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
-      val rows = (0 until 60).flatMap { g =>
-        val distOf = (0 until 12).map(_ => values(rnd.nextInt(values.length)))
-        // g % 10 == 0: fewer candidates than k; g % 10 == 1: only null rows
-        val nCands = if (g % 10 == 0) rnd.nextInt(k) else if (g % 10 == 1) 0 else rnd.nextInt(40)
-        val cands = Seq.fill(nCands) {
-          val id = rnd.nextInt(12)
-          (g, Option(distOf(id)), Option(id.toLong))
+      // a 5° grid makes exact distance ties (points between two grid POIs);
+      // ids repeat (the same or another coordinate); a few coordinates are
+      // NaN/±Inf or out of range; POIs sit at the poles and on the
+      // antimeridian
+      val grid = Seq.fill(120)((5.0 * (rnd.nextInt(72) - 36), 5.0 * (rnd.nextInt(36) - 18)))
+      val spread = Seq.fill(120)((rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90))
+      val edges = Seq((0.0, 90.0), (45.0, -90.0), (180.0, 10.0), (-180.0, -10.0), (179.99, 0.0),
+        (190.0, 12.0), (-30.0, 95.0), (-200.0, -40.0))
+      val coords = grid ++ spread ++ edges ++
+        Seq.fill(6)((hostile(rnd.nextInt(3)), rnd.nextDouble() * 180 - 90)) ++
+        Seq.fill(6)((rnd.nextDouble() * 360 - 180, hostile(rnd.nextInt(3))))
+      val pois = coords.zipWithIndex.map { case ((lon, lat), j) =>
+        (if (j % 7 == 3) (j / 2).toLong else j.toLong, lon, lat)
+      }
+      val poiSets = Seq(pois, pois.take(3)) // the second has fewer than k POIs
+      val points = pois.take(40).map { case (_, lon, lat) => (lon, lat) } ++ // on a POI
+        pois.take(40).map { case (_, lon, lat) => (if (lon > 0) lon - 180 else lon + 180, -lat) } ++ // antipodes
+        Seq.fill(40)((5.0 * (rnd.nextInt(72) - 36) + 2.5, 5.0 * (rnd.nextInt(36) - 18))) ++ // grid ties
+        Seq.fill(60)((rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90)) ++
+        Seq((0.0, 90.0), (120.0, -90.0), (180.0, 0.0), (-180.0, 45.0), (-179.999, -30.0),
+          (Double.NaN, 0.0), (0.0, Double.PositiveInfinity), (10.0, 95.0))
+      for (ps <- poiSets; k <- Seq(1, 5)) {
+        val lons = ps.map(_._2).toArray
+        val lats = ps.map(_._3).toArray
+        val want = points.map { case (lon, lat) => bits(bruteForce(lon, lat, ps, k)) }
+        for (res <- Seq(0, 1, 2, 4, 7, 11, KnnIndex.resFor(lons, lats, k)).distinct) {
+          val index = KnnIndex(ps.map(_._1).toArray, lons, lats, res)
+          for (((lon, lat), w) <- points.zip(want)) {
+            val got = bits(index.nearest(lon, lat, k)._1.toSeq)
+            assert(got === w, s"seed $seed, ${ps.size} POIs, k $k, res $res, point ($lon, $lat)")
+          }
         }
-        val nulls = Seq.fill(1 + rnd.nextInt(3))(rnd.nextInt(3) match {
-          case 0 => (g, Option.empty[Double], Option.empty[Long])
-          case 1 => (g, Option.empty[Double], Option(rnd.nextInt(12).toLong))
-          case _ => (g, Option(values(rnd.nextInt(values.length))), Option.empty[Long])
-        })
-        cands ++ nulls
       }
-      val shuffled = rnd.shuffle(rows)
-      val expected = shuffled.groupBy(_._1).map { case (g, rs) =>
-        g -> bits(rs.collect { case (_, Some(d), Some(i)) => (d, i) }.distinctBy(_._2)
-          .sortWith { case ((d1, i1), (d2, i2)) =>
-            val c = java.lang.Double.compare(d1, d2)
-            c < 0 || (c == 0 && i1 < i2)
-          }.take(k))
-      }
-      // first() rides along as lon/lat/cell do in knnJoin's round aggregate
-      val df = shuffled.toDF("g", "dist", "id").repartition(6)
-        .groupBy("g").agg(KnnTopK.topk(col("dist"), col("id"), k).as("topk"), first(col("g")).as("g1"))
-      val got = df.collect().map { r =>
-        r.getInt(0) -> bits(r.getSeq[org.apache.spark.sql.Row](1).map(c => (c.getDouble(0), c.getLong(1))))
-      }.toMap
-      assert(got.keySet === expected.keySet, s"seed $seed")
-      val wrong = expected.keys.toSeq.sorted.filter(g => got(g) != expected(g))
-        .map(g => s"group $g: got ${got(g)}, want ${expected(g)}")
-      assert(wrong.isEmpty, s"seed $seed: ${wrong.take(3).mkString("; ")}")
-      val aggs = new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) {
-        case a: HashAggregateExec => a
-        case a: ObjectHashAggregateExec => a
-        case a: SortAggregateExec => a
-      }
-      assert(aggs.nonEmpty && aggs.forall(_.isInstanceOf[HashAggregateExec]),
-        s"top-k must plan as HashAggregateExec only:\n${df.queryExecution.executedPlan}")
     }
+    // every dist_m is the haversine of its pair, to the bit
+    val rnd = new scala.util.Random(20261019L)
+    val pois = Array.tabulate(2000)(j => (j.toLong, rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90))
+    val byId = pois.map(p => p._1 -> p).toMap
+    val lons = pois.map(_._2)
+    val lats = pois.map(_._3)
+    val index = KnnIndex(pois.map(_._1), lons, lats, KnnIndex.resFor(lons, lats, 10))
+    var pairs = 0
+    for (_ <- 0 until 2000) {
+      val (lon, lat) = (rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90)
+      for ((i, d) <- index.nearest(lon, lat, 10)._1) {
+        val (_, plon, plat) = byId(i)
+        val want = CellMath.haversineMeters(lon, lat, plon, plat)
+        assert(java.lang.Double.doubleToLongBits(d) == java.lang.Double.doubleToLongBits(want),
+          s"($lon, $lat) → POI $i: $d vs $want")
+        pairs += 1
+      }
+    }
+    assert(pairs === 20000)
+  }
+
+  test("J4 kNN is one map-only pass: no shuffle bytes, at most 2 jobs") {
+    val pts = mkPoints(200).localCheckpoint()
+    val pois = nodes.where(map_contains_key(col("tags"), "amenity"))
+      .select(col("id").as("poi_id"), col("lon"), col("lat")).localCheckpoint()
+    val sc = spark.sparkContext
+    val group = "knn-map-only-guard"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffleBytes = new java.util.concurrent.atomic.AtomicLong()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group)) {
+          jobs.incrementAndGet()
+          e.stageIds.foreach(stages.add)
+        }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          shuffleBytes.addAndGet(e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
+    }
+    ListenerBridge.drain(sc)
+    sc.addSparkListener(listener)
+    val rows = try {
+      sc.setJobGroup(group, "one knnJoin call")
+      try SpatialJoin.knnJoin(pts, pois, k = 3)
+      finally sc.clearJobGroup()
+    } finally {
+      ListenerBridge.drain(sc)
+      sc.removeSparkListener(listener)
+    }
+    assert(rows.count() === 200L * 3)
+    assert(jobs.get >= 1 && jobs.get <= 2, s"${jobs.get} jobs")
+    assert(shuffleBytes.get === 0L, s"${shuffleBytes.get} shuffle bytes written")
   }
 
   test("J2 super-relation (relation-of-relations) resolves to depth 2 with all rings") {
@@ -306,7 +329,7 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     val pois = nodes.where(map_contains_key(col("tags"), "amenity"))
       .select(col("id").as("poi_id"), col("lon"), col("lat")).cache()
     val k = 3
-    val got = SpatialJoin.knnJoin(pts, pois, k = k, res = 8, maxRadius = 16)
+    val got = SpatialJoin.knnJoin(pts, pois, k = k)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
 
     val poiLocal = pois.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
@@ -322,20 +345,17 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
 
   test("J4 kNN equals brute force on a grid its disk wraps around (2·radius+1 > 2^res)") {
     import spark.implicits._
-    // 5 POIs spread over the 16 cells of res 2: the adaptive first radius is
-    // ((sqrt(4·k / (5/16)) - 1) / 2).toInt = 2, and 2·2+1 = 5 > 4 columns,
-    // so both rounds (radius 2, then 4) take the per-row disk UDF
+    // 5 POIs and k = 3: all 4 cells of res 1 are non-empty, so the derived
+    // res is 0; its one cell cannot retire a point at r = 0, and the disk of
+    // r = 1 would wrap the grid, so every point scans instead
     val pois = Seq((1L, -170.0, 60.0), (2L, -100.0, -30.0), (3L, 10.0, 10.0),
       (4L, 80.0, 50.0), (5L, 150.0, -60.0)).toDF("poi_id", "lon", "lat")
     val pts = (0 until 60).map { i =>
       (i.toLong, -177.0 + 6.0 * i, 80.0 * math.sin(i * 0.7))
     }.toDF("pt_id", "lon", "lat")
     val k = 3
-    val got = SpatialJoin.knnJoin(pts, pois, k = k, res = 2, maxRadius = 4)
+    val got = SpatialJoin.knnJoin(pts, pois, k = k)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
-    // every point retires inside the rings: a disk that missed cells would
-    // leave stragglers for the exact fallback (or retire them wrongly)
-    assert(SpatialJoin.lastKnnStragglerCount === 0L)
     val poiLocal = pois.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     val expected = pts.collect().flatMap { r =>
       val (id, lon, lat) = (r.getLong(0), r.getDouble(1), r.getDouble(2))
@@ -349,14 +369,16 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
 
   test("J4 kNN straggler fallback is measured (observe + accessor), result still exact") {
     import spark.implicits._
-    val pts = mkPoints(80)
+    // the antipodes of the fixture points lie far from every POI: their
+    // rings run out of non-empty cells before the k-th distance is safe,
+    // and they scan every POI — the "bounded straggler" claim must be
+    // measured, not assumed
+    val pts = mkPoints(80).select(col("pt_id"),
+      when(col("lon") > 0, col("lon") - 180).otherwise(col("lon") + 180).as("lon"), (-col("lat")).as("lat"))
     val pois = nodes.where(map_contains_key(col("tags"), "amenity"))
       .select(col("id").as("poi_id"), col("lon"), col("lat")).cache()
     val k = 3
-    // maxRadius=1 starves the ring expansion: most points cannot prove the
-    // k-th distance safe after one ring and take the exact fallback — the
-    // "bounded straggler" claim must be measured, not assumed
-    val got = SpatialJoin.knnJoin(pts, pois, k = k, res = 8, maxRadius = 1)
+    val got = SpatialJoin.knnJoin(pts, pois, k = k)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(3))).toSet
     val n = SpatialJoin.lastKnnStragglerCount
     assert(n > 0 && n <= 80, s"expected a positive straggler count <= 80, got $n")
@@ -372,7 +394,7 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     assert(got === expected)
     // the accessor reflects the most recent call (10 points can at most
     // leave 10 stragglers), not the 80-point run's stale fallback
-    SpatialJoin.knnJoin(pts.limit(10), pois, k = 1, res = 8, maxRadius = 16).count()
+    SpatialJoin.knnJoin(pts.limit(10), pois, k = 1).count()
     val n2 = SpatialJoin.lastKnnStragglerCount
     assert(n2 >= 0 && n2 <= 10, s"accessor not refreshed by latest call: $n2")
   }
@@ -383,7 +405,7 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     val pois = nodes.where(map_contains_key(col("tags"), "amenity"))
       .select(col("id").as("poi_id"), col("lon"), col("lat"))
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val out = SpatialJoin.knnJoin(pts, pois, k = 2, res = 8, maxRadius = 16)
+    val out = SpatialJoin.knnJoin(pts, pois, k = 2)
     out.count()
     val leaked = spark.sparkContext.getPersistentRDDs.keySet -- before
     // exactly one new persistent RDD: the returned result's localCheckpoint
