@@ -37,7 +37,7 @@ object ScalingRunner {
     val parityOk = ImageTable.parity(images, centers)
       .where(col("psnr_db") >= 40.0 && col("caption_ok")).count()
     val t1 = System.nanoTime()
-    val tiles = GraftJob.run(images, polys, z = 10, res = 12, mode = "salted", salt = 8)
+    val tiles = GraftJob.run(images, polys, z = 10, res = 12)
     tiles.agg(sum("n_images")).collect().head.getLong(0)
     val t2 = System.nanoTime()
     System.err.println(f"[bench] parity=${(t1 - t0) / 1e9}%.2fs tiles=${(t2 - t1) / 1e9}%.2fs")

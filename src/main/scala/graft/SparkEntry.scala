@@ -106,7 +106,7 @@ object SparkEntry {
       // the real cell-join + ray-cast PIP operator; oracle reduces to bbox
       // containment because the polygons are axis-aligned rectangles
       SpatialJoin.pipJoin(lineitemPoints(s, dir).select("l_orderkey", "l_linenumber", "lon", "lat"),
-          nationRectPolys(s, dir), res = 10, mode = "broadcast")
+          nationRectPolys(s, dir), res = 10)
         .select(col("l_orderkey"), col("l_linenumber"), col("poly_id").as("rect_id"))
     }),
     "q11_knn" -> ((s, dir) => {
@@ -431,7 +431,7 @@ object SparkEntry {
         dropCols = Seq("exp_n_rings", "exp_min_lon", "exp_max_lat"))
     }),
     "p5_graft_join" -> ((s, dir) => {
-      GraftJob.joinRows(images(s, dir), polygons(s, dir), z = 10, res = 12, mode = "salted")
+      GraftJob.joinRows(images(s, dir), polygons(s, dir), z = 10, res = 12)
     }),
     "p6_graft_tiles" -> ((s, dir) => {
       GraftJob.run(images(s, dir), polygons(s, dir), z = 10, res = 12)

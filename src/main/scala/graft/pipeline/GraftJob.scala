@@ -13,7 +13,8 @@ import org.apache.spark.sql.functions._
   * Steps (all declarative — Catalyst plans the physical strategy):
   *   1. images → tile assignment at zoom `z` (codegen cell encode);
   *   2. images × polygons PIP join (cell equi-join at `res` + exact
-  *      ray-cast; broadcast/salted per `mode`);
+  *      ray-cast; [[SpatialJoin.pipJoin]] picks broadcast or hot-cell
+  *      salting from the data);
   *   3. per-tile aggregation of join hits (partial agg map-side).
   *
   * Output: (tile, tile_z, tile_x, tile_y, n_images, n_hits,
@@ -21,14 +22,18 @@ import org.apache.spark.sql.functions._
   */
 object GraftJob {
 
-  def run(images: DataFrame, polys: DataFrame, z: Int = 10, res: Int = 12,
-      mode: String = "salted", salt: Int = 8,
-      hotCellThreshold: Long = 100000L): DataFrame = {
-    val assigned = Tiles.assignPoints(images, z)
-    val hits = SpatialJoin.pipJoin(
-      assigned.select("image_id", "lon", "lat", "tile", "tile_z", "tile_x", "tile_y"),
-      polys, res = res, mode = mode, salt = salt, hotCellThreshold = hotCellThreshold)
+  def run(images: DataFrame, polys: DataFrame, z: Int = 10, res: Int = 12): DataFrame = {
+    val (assigned, hits) = assignAndJoin(images, polys, z, res)
     tileRollup(assigned, hits)
+  }
+
+  /** Images assigned to tiles at zoom `z`, and their PIP hits at `res`. */
+  private def assignAndJoin(images: DataFrame, polys: DataFrame, z: Int,
+      res: Int): (DataFrame, DataFrame) = {
+    val assigned = Tiles.assignPoints(images, z)
+    (assigned, SpatialJoin.pipJoin(
+      assigned.select("image_id", "lon", "lat", "tile", "tile_z", "tile_x", "tile_y"),
+      polys, res = res))
   }
 
   /** Per-tile aggregation of assigned images and their PIP hits — the ONE
@@ -52,13 +57,8 @@ object GraftJob {
     * per-hit `concat(src, poly_id)` allocation must never be built at all
     * on the streaming hot path, not rely on the optimizer pruning an
     * unused aggregate (round-6). */
-  def runAdditive(images: DataFrame, polys: DataFrame, z: Int = 10, res: Int = 12,
-      mode: String = "salted", salt: Int = 8,
-      hotCellThreshold: Long = 100000L): DataFrame = {
-    val assigned = Tiles.assignPoints(images, z)
-    val hits = SpatialJoin.pipJoin(
-      assigned.select("image_id", "lon", "lat", "tile", "tile_z", "tile_x", "tile_y"),
-      polys, res = res, mode = mode, salt = salt, hotCellThreshold = hotCellThreshold)
+  def runAdditive(images: DataFrame, polys: DataFrame, z: Int = 10, res: Int = 12): DataFrame = {
+    val (assigned, hits) = assignAndJoin(images, polys, z, res)
     val tileImages = assigned.groupBy("tile", "tile_z", "tile_x", "tile_y")
       .agg(count(lit(1)).as("n_images"))
     val tileHits = hits.groupBy("tile").agg(count(lit(1)).as("n_hits"))
@@ -67,13 +67,6 @@ object GraftJob {
   }
 
   /** The raw join rows (for parity checks / downstream training-data use). */
-  def joinRows(images: DataFrame, polys: DataFrame, z: Int = 10, res: Int = 12,
-      mode: String = "salted", salt: Int = 8,
-      hotCellThreshold: Long = 100000L): DataFrame = {
-    val assigned = Tiles.assignPoints(images, z)
-    SpatialJoin.pipJoin(
-      assigned.select("image_id", "lon", "lat", "tile"),
-      polys, res = res, mode = mode, salt = salt, hotCellThreshold = hotCellThreshold)
-      .select("image_id", "tile", "src", "poly_id")
-  }
+  def joinRows(images: DataFrame, polys: DataFrame, z: Int = 10, res: Int = 12): DataFrame =
+    assignAndJoin(images, polys, z, res)._2.select("image_id", "tile", "src", "poly_id")
 }

@@ -50,7 +50,7 @@ object Main {
     val results = CheckpointedRunner.run(spark, tiled, outDir,
       slice => {
         val hits = graft.spatial.join.SpatialJoin.pipJoin(slice, polys,
-          res = res, mode = "salted", preparedCells = Some(polyCells))
+          res = res, preparedCells = Some(polyCells))
         // the library's flagship rollup — one schema definition, not an
         // inline re-implementation that can drift
         GraftJob.tileRollup(slice, hits)

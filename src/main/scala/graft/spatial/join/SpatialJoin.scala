@@ -8,23 +8,11 @@ import org.apache.spark.sql.functions._
 
 /** Cell-indexed spatial joins (north_star J3/J4): the PIP join is rewritten
   * manually into a cell equi-join + exact ray-cast test (SURVEY.md §4 —
-  * deliberate API-layer rewrite instead of planner surgery), with three
-  * physical paths:
-  *
-  *   - broadcast: polygon side broadcast when small (north_star
-  *     "broadcast joins for small polygon sets");
-  *   - shuffle: plain cell equi-join, AQE skew-join handles moderate skew;
-  *   - salted: hot cells (dense urban tiles) replicated S ways on the
-  *     polygon side, points pick `pmod(xxhash64(lon, lat), S)` — bounded
-  *     fan-out skew mitigation (north_star "salted repartitioning for hot
-  *     cells"). Coordinate-hash salting is deterministic across task
-  *     retries (an id column is not guaranteed to exist on the points
-  *     side); the trade is that MANY POINTS STACKED ON ONE EXACT
-  *     COORDINATE share a salt id and are not split — a cell that is hot
-  *     because of coordinate-stacked records (geocoded-to-centroid data)
-  *     needs pre-jittering or a caller-side id-hash salt.
-  *
-  * All paths produce identical rows (asserted in SpatialJoinSpec).
+  * deliberate API-layer rewrite instead of planner surgery). [[pipJoin]]
+  * has one path whose physical shape follows from the data: the plain cell
+  * join when Catalyst broadcasts a side (north_star "broadcast joins for
+  * small polygon sets"), and hot-cell salting only when both sides must
+  * shuffle (north_star "salted repartitioning for hot cells").
   */
 object SpatialJoin {
 
@@ -70,15 +58,42 @@ object SpatialJoin {
 
   /** Point-in-polygon join.
     *
+    * One decision, made at planning time without running a job: when
+    * `spark.sql.autoBroadcastJoinThreshold` is positive and Catalyst's size
+    * estimate of EITHER side is within it, the result is the plain cell
+    * equi-join — Catalyst broadcasts that side, so no hot cell can skew a
+    * shuffle. Otherwise both sides shuffle and hot cells are salted: with
+    * N points and P = `spark.sql.shuffle.partitions`, a cell holding more
+    * than N/P points gets [[hotCellSalt]] salt ids; its points pick
+    * `pmod(xxhash64(lon, lat), salt)` and its polygon rows replicate once
+    * per salt id, so key (cell, salt_id) splits it across reducers while
+    * every matching pair still meets exactly once. Cold cells join on
+    * salt id 0, unreplicated.
+    *
+    * The salted path's caveats:
+    *   - occupancy is ONE map-side-combined count per cell (shuffles only
+    *     distinct cells, never the points); N is its sum, a window over
+    *     the distinct cells in one partition. A separate global total
+    *     would rescan the points: its copy of the count does not share
+    *     the count's exchange (the optimizer infers different filters for
+    *     it). Fewer than P cells can be hot, so the hot set is
+    *     broadcast-bounded. It feeds two broadcast probes (point side,
+    *     polygon side); AQE assigns both the SAME BroadcastQueryStage
+    *     (ExplainProbe prints it), so the count costs one narrow scan. With
+    *     AQE disabled it evaluates once per probe — cost, not correctness;
+    *   - `points` must be deterministic: a non-deterministic source could
+    *     let the two evaluations disagree on hotness and mis-route salt ids
+    *     (materialize a rand()-derived input first);
+    *   - coordinate-hash salting is deterministic across task retries (an
+    *     id column is not guaranteed on the points side); the trade is that
+    *     MANY POINTS STACKED ON ONE EXACT COORDINATE share a salt id and are
+    *     not split — a cell hot because of coordinate-stacked records
+    *     (geocoded-to-centroid data) needs pre-jittering.
+    *
     * @param points  must carry `lon`, `lat` (any other columns pass through)
     * @param polys   polygons table (id, rings, tags, bbox, ...)
     * @param res     cell resolution for the equi-join (higher = finer cover,
     *                fewer false candidates, more polygon replication)
-    * @param mode    "broadcast" | "shuffle" | "salted" | "auto" (size-based pick)
-    * @param salt    replication factor for the salted path
-    * @param hotCellThreshold  salted mode replicates only cells whose point
-    *                occupancy reaches this count (≤ 0 = replicate every
-    *                cell, the pre-round-5 behavior)
     * @param preparedCells  pass [[preparedPolygonCells]] (ideally
     *                localCheckpointed) to reuse ONE cover explosion across
     *                many pipJoin calls over the same polygons — a bucketed
@@ -87,8 +102,6 @@ object SpatialJoin {
     *                prepared resolution must equal `res` (enforced)
     */
   def pipJoin(points: DataFrame, polys: DataFrame, res: Int = 12,
-      mode: String = "shuffle", salt: Int = 8,
-      hotCellThreshold: Long = 100000L,
       preparedCells: Option[PreparedCells] = None): DataFrame = {
     preparedCells.foreach(pc => require(pc.res == res,
       s"preparedCells built at res ${pc.res} but pipJoin called with res $res — " +
@@ -96,74 +109,46 @@ object SpatialJoin {
     val polyCells = preparedCells.map(_.df).getOrElse(preparedPolygonCells(polys, res).df)
     val pts = points.withColumn("cell", F.cell_of(col("lon"), col("lat"), res))
     val exact = F.point_in_polygon(col("lon"), col("lat"), col("rings"))
+    val conf = points.sparkSession.sessionState.conf
+    val threshold = conf.autoBroadcastJoinThreshold
+    def broadcastable(df: DataFrame): Boolean =
+      threshold > 0 && df.queryExecution.optimizedPlan.stats.sizeInBytes <= threshold
 
-    // "auto": broadcast when Catalyst's size estimate of the exploded
-    // polygon-cell side fits the session's broadcast threshold (a planning-
-    // time stat — no job is run), salted otherwise. Mirrors what AQE would
-    // decide at runtime but commits to the polygon-replication strategy up
-    // front, which the salted path needs.
-    val resolvedMode = if (mode != "auto") mode else {
-      val threshold = org.apache.spark.network.util.JavaUtils.byteStringAsBytes(
-        points.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold", "10MB"))
-      val est = polyCells.queryExecution.optimizedPlan.stats.sizeInBytes
-      if (threshold > 0 && est <= threshold) "broadcast" else "salted"
-    }
-
-    val joined = resolvedMode match {
-      case "broadcast" =>
-        pts.join(broadcast(polyCells), Seq("cell"))
-      case "shuffle" =>
-        pts.join(polyCells, Seq("cell"))
-      case "salted" =>
-        // polygon-cell rows replicated `salt` ways; each point probes one
-        // replica. Key (cell, salt_id) splits a hot cell across `salt`
-        // reducers while every matching pair still meets exactly once.
-        //
-        // Hot-cell-targeted (round-5): replicating the WHOLE polygon-cell
-        // side ×salt pays salt× build-side shuffle volume even for the
-        // overwhelming majority of cells that aren't hot. Instead, one
-        // map-side-combined occupancy count (shuffles only distinct cells,
-        // never the points) finds the cells at/above `hotCellThreshold`;
-        // only those replicate, and only their points spread across salt
-        // buckets. At most |points|/threshold cells can qualify, so the
-        // hot set is broadcast-bounded by construction. The two broadcast
-        // probes of the same count subtree collapse at runtime: AQE
-        // assigns both the SAME BroadcastQueryStage (verified in
-        // ExplainProbe — one scan+agg executes), so the occupancy pass
-        // costs one narrow scan, not two. Caveats that follow: with AQE
-        // disabled the subtree evaluates once per probe (two extra narrow
-        // scans — cost, not correctness), and `points` must be
-        // deterministic — the standard Spark recomputation contract, but
-        // here a non-deterministic source could additionally let the two
-        // evaluations disagree on hotness and mis-route salt ids (a
-        // rand()-derived input should be materialized first; the legacy
-        // thr<=0 path has no such dependence).
-        if (hotCellThreshold <= 0) {
-          val replicated = polyCells.withColumn("salt_id",
-            explode(sequence(lit(0), lit(salt - 1))))
-          val saltedPts = pts.withColumn("salt_id",
-            pmod(xxhash64(col("lon"), col("lat")), lit(salt)).cast("int"))
-          saltedPts.join(replicated, Seq("cell", "salt_id")).drop("salt_id")
-        } else {
-          val hotCells = pts.groupBy("cell").agg(count(lit(1)).as("_n"))
-            .where(col("_n") >= hotCellThreshold)
-            .select(col("cell"), lit(true).as("_hot"))
-          val replicated = polyCells.join(broadcast(hotCells), Seq("cell"), "left")
-            .withColumn("salt_id",
-              explode(when(col("_hot"), sequence(lit(0), lit(salt - 1)))
-                .otherwise(array(lit(0)))))
-            .drop("_hot")
-          val saltedPts = pts.join(broadcast(hotCells), Seq("cell"), "left")
-            .withColumn("salt_id",
-              when(col("_hot"), pmod(xxhash64(col("lon"), col("lat")), lit(salt)).cast("int"))
-                .otherwise(lit(0)))
-            .drop("_hot")
-          saltedPts.join(replicated, Seq("cell", "salt_id")).drop("salt_id")
-        }
-      case other => throw new IllegalArgumentException(s"unknown pipJoin mode: $other")
+    val joined = if (broadcastable(pts) || broadcastable(polyCells)) {
+      pts.join(polyCells, Seq("cell"))
+    } else {
+      val p = conf.numShufflePartitions
+      val hotCells = pts.groupBy("cell").agg(count(lit(1)).as("_n"))
+        .select(col("cell"), saltUdf(col("_n"), sum("_n").over(), lit(p)).as("_salt"))
+        .where(col("_salt") > 1)
+      val replicated = polyCells.join(broadcast(hotCells), Seq("cell"), "left")
+        .withColumn("salt_id", explode(sequence(lit(0), coalesce(col("_salt"), lit(1)) - 1)))
+        .drop("_salt")
+      val saltedPts = pts.join(broadcast(hotCells), Seq("cell"), "left")
+        .withColumn("salt_id",
+          coalesce(pmod(xxhash64(col("lon"), col("lat")), col("_salt")).cast("int"), lit(0)))
+        .drop("_salt")
+      saltedPts.join(replicated, Seq("cell", "salt_id")).drop("salt_id")
     }
     joined.where(exact).drop("cell", "rings")
   }
+
+  /** Only caller: the benchmark's traced run (`perfbench/.../Traced.scala`),
+    * which compiles against this signature. `mode` is ignored. No default
+    * arguments, so overload resolution against [[pipJoin]] stays unambiguous. */
+  @deprecated("pipJoin picks its physical path from the data; drop the mode argument", "0.1.0")
+  def pipJoin(points: DataFrame, polys: DataFrame, res: Int, mode: String,
+      preparedCells: Option[PreparedCells]): DataFrame =
+    pipJoin(points, polys, res, preparedCells)
+
+  /** Salt ids for a cell holding `nc` of `n` points when the join shuffles
+    * into `p` partitions: a cell above its fair share n/p is hot and gets
+    * ceil(nc / (n/p)) ids, at most `p`; every other cell gets 1 (unsalted).
+    * Integer arithmetic: nc·p > n is exactly nc > n/p. */
+  private[spatial] def hotCellSalt(nc: Long, n: Long, p: Int): Int =
+    if (nc * p <= n) 1 else math.min(p.toLong, (nc * p + n - 1) / n).toInt
+
+  private val saltUdf = udf(hotCellSalt _)
 
   /** k-nearest-neighbour join by expanding cell rings (north_star J4), as
     * one map-only pass over the points.

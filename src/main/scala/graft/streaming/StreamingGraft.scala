@@ -59,15 +59,11 @@ object StreamingGraft {
     * directly (same batchId → same partition replaced, totals unchanged). */
   def writeBatchDelta(batch: DataFrame, polys: DataFrame, deltaDir: String,
       batchId: Long, z: Int, res: Int): Unit =
-    // mode "auto" (round-6, guide §3.1): micro-batches are SMALL relative
-    // to the static polygon index, and the index itself is broadcastable
-    // whenever Catalyst's estimate says so — then the per-batch delta is a
-    // broadcast join with zero shuffle of the batch, instead of paying the
-    // salted path's occupancy count + (cell, salt) shuffle per batch. When
-    // the index outgrows the broadcast threshold, auto resolves to salted
-    // — the same 100-TB path as before (all modes produce identical rows,
-    // SpatialJoinSpec).
-    GraftJob.runAdditive(batch, polys, z = z, res = res, mode = "auto")
+    // micro-batches are SMALL relative to the static polygon index: while
+    // either side's size estimate fits the broadcast threshold, pipJoin's
+    // per-batch delta is a broadcast join with zero shuffle of the batch,
+    // instead of a hot-cell occupancy count + (cell, salt) shuffle per batch
+    GraftJob.runAdditive(batch, polys, z = z, res = res)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")

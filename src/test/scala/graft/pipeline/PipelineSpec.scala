@@ -27,12 +27,16 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("join rows identical across salted and broadcast modes") {
-    val a = GraftJob.joinRows(images, polys, mode = "salted")
+    // the default threshold broadcasts the small fixture; -1 forces both
+    // sides to shuffle, so pipJoin takes its hot-cell salted path
+    def rows = GraftJob.joinRows(images, polys)
       .collect().map(r => (r.getString(0), r.getString(2), r.getLong(3))).toSet
-    val b = GraftJob.joinRows(images, polys, mode = "broadcast")
-      .collect().map(r => (r.getString(0), r.getString(2), r.getLong(3))).toSet
-    assert(a === b)
-    assert(a.nonEmpty)
+    val broadcast = rows
+    val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val salted = try rows finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
+    assert(salted === broadcast)
+    assert(salted.nonEmpty)
   }
 
   test("checkpointed run completes, resume skips all buckets") {

@@ -284,43 +284,98 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     }.toSet
   }
 
-  test("J3 PIP join: all three modes equal brute force") {
-    import spark.implicits._
-    val pts = mkPoints(400).cache()
-    val ptsLocal = pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).toSeq
-    val expected = bruteForcePip(ptsLocal)
-    for (mode <- Seq("broadcast", "shuffle", "salted", "auto")) {
-      val got = SpatialJoin.pipJoin(pts, polys, res = 12, mode = mode)
-        .select("pt_id", "src", "poly_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(got === expected, s"mode=$mode got=${got.size} exp=${expected.size}")
-    }
-    // hot-cell-targeted salting: every threshold regime — 0 (legacy: every
-    // cell replicated), 1 (every occupied cell hot), 3 (mixed: the 80%-in-
-    // 4-clusters fixture has both hot and cold cells), huge (no cell hot,
-    // pure cold path) — must produce identical rows
-    for (threshold <- Seq(0L, 1L, 3L, Long.MaxValue)) {
-      val got = SpatialJoin.pipJoin(pts, polys, res = 12, mode = "salted",
-        hotCellThreshold = threshold)
-        .select("pt_id", "src", "poly_id").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      assert(got === expected, s"salted threshold=$threshold got=${got.size} exp=${expected.size}")
-    }
-    assert(expected.nonEmpty, "fixture must produce at least one PIP hit")
+  // runs `body` with spark.sql.autoBroadcastJoinThreshold set to `v`
+  private def withBroadcastThreshold[T](v: String)(body: => T): T = {
+    val was = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", v)
+    try body finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", was)
   }
 
+  // `n` distinct coordinates a few cm around each seed, kept only where
+  // they stay in the seed's res-12 cell
+  private def aroundSeeds(seeds: Seq[(Double, Double)], n: Int): Seq[(Double, Double)] =
+    seeds.flatMap { case (lon, lat) =>
+      val cell = CellMath.cellOf(lon, lat, 12)
+      (0 until n).map(i => (lon + (i % 20 - 10) * 1e-7, lat + (i / 20 - 10) * 1e-7))
+        .filter { case (x, y) => CellMath.cellOf(x, y, 12) == cell }
+    }
+
+  test("J3 PIP join equals brute force in all skew regimes, both paths") {
+    import spark.implicits._
+    val base = mkPoints(400).collect().map(r => (r.getDouble(1), r.getDouble(2))).toSeq
+    // seeds: points with a PIP hit, one per res-12 cell
+    val seeds = bruteForcePip(base.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) })
+      .map(_._1.toInt).toSeq.sorted.map(base)
+      .distinctBy { case (x, y) => CellMath.cellOf(x, y, 12) }
+    assert(seeds.size >= 3, s"fixture needs 3 cells with PIP hits, has ${seeds.size}")
+    val p = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    // the three regimes of the hot-cell rule at P shuffle partitions:
+    //   uniform  — the 80%-in-4-clusters fixture spreads over many cells,
+    //              none above N/P;
+    //   one hot  — 300 more points in one cell;
+    //   all hot  — ≤ P-1 occupied cells, each above N/P
+    val regimes = Seq(
+      "uniform" -> base,
+      "one hot cell" -> (base ++ aroundSeeds(seeds.take(1), 300)),
+      "all hot" -> aroundSeeds(seeds.take(p - 1), 100))
+    for ((regime, coords) <- regimes) {
+      val ptsLocal = coords.zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+      val occupancy = coords.groupBy { case (x, y) => CellMath.cellOf(x, y, 12) }
+        .values.map(_.size.toLong).toSeq
+      val salts = occupancy.map(SpatialJoin.hotCellSalt(_, coords.size.toLong, p))
+      regime match {
+        case "uniform" => assert(salts.forall(_ == 1), s"$regime: $occupancy")
+        case "one hot cell" => assert(salts.count(_ > 1) === 1, s"$regime: $occupancy")
+        case "all hot" =>
+          assert(occupancy.size < p && salts.forall(_ > 1), s"$regime: $occupancy")
+      }
+      val expected = bruteForcePip(ptsLocal)
+      assert(expected.nonEmpty, s"$regime: fixture must produce at least one PIP hit")
+      val pts = ptsLocal.toDF("pt_id", "lon", "lat")
+      for (threshold <- Seq("10MB", "-1")) withBroadcastThreshold(threshold) {
+        val joined = SpatialJoin.pipJoin(pts, polys, res = 12)
+        val plan = joined.queryExecution.executedPlan.toString
+        if (threshold == "-1") assert(plan.contains("salt_id"), s"$regime: expected the salted join\n$plan")
+        else assert(plan.contains("BroadcastHashJoin") && !plan.contains("salt_id"),
+          s"$regime: expected the plain broadcast cell join\n$plan")
+        val got = joined.select("pt_id", "src", "poly_id").collect()
+          .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
+        assert(got === expected, s"$regime threshold=$threshold got=${got.size} exp=${expected.size}")
+      }
+    }
+  }
+
+  test("J3 hot-cell salt rule") {
+    import SpatialJoin.hotCellSalt
+    // a cell at exactly N/P is not hot; one point above it is
+    assert(hotCellSalt(nc = 250, n = 1000, p = 4) === 1)
+    assert(hotCellSalt(nc = 251, n = 1000, p = 4) === 2)
+    // ceil(n_c / (N/P)), capped at P
+    assert(hotCellSalt(nc = 600, n = 1000, p = 4) === 3)
+    assert(hotCellSalt(nc = 1000, n = 1000, p = 4) === 4)
+    assert(hotCellSalt(nc = 999, n = 1000, p = 200) === 200)
+    // P = 1 never salts; N = 0 has no hot cell
+    assert(hotCellSalt(nc = 1000, n = 1000, p = 1) === 1)
+    assert(hotCellSalt(nc = 0, n = 0, p = 4) === 1)
+  }
+
+  private def pipPlan: String = SpatialJoin.pipJoin(mkPoints(50), polys, res = 10)
+    .queryExecution.executedPlan.toString
+
   test("J3 auto mode picks broadcast for a tiny polygon side") {
-    // fixture polys are a few KB — Catalyst's size estimate must sit far
-    // below the 10MB default threshold and resolve auto → broadcast
-    val plan = SpatialJoin.pipJoin(mkPoints(50), polys, res = 10, mode = "auto")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"), plan)
+    // fixture polys are a few KB: Catalyst's size estimate sits far below
+    // the 10MB default threshold, so pipJoin takes the plain cell join;
+    // with the threshold off, both sides shuffle and hot cells are salted
+    val plan = pipPlan
+    assert(!plan.contains("salt_id"), plan)
+    val saltedPlan = withBroadcastThreshold("-1")(pipPlan)
+    assert(saltedPlan.contains("SortMergeJoin") && saltedPlan.contains("salt_id"), saltedPlan)
   }
 
   test("J3 broadcast path actually broadcasts") {
-    val plan = SpatialJoin.pipJoin(mkPoints(50), polys, res = 10, mode = "broadcast")
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") || plan.contains("BroadcastNestedLoopJoin"), plan)
+    // the plain cell join is planned as a broadcast hash join, not a shuffle
+    val plan = pipPlan
+    assert(plan.contains("BroadcastHashJoin") && plan.contains("BroadcastExchange"), plan)
   }
 
   test("J4 kNN join equals brute force") {
@@ -451,7 +506,7 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
       assert(plan.contains("Bucketed: true"), plan)
       val got = joined.select("pt_id", "src", "poly_id").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
-      val expected = SpatialJoin.pipJoin(mkPoints(300), polys, res = res, mode = "shuffle")
+      val expected = SpatialJoin.pipJoin(mkPoints(300), polys, res = res)
         .select("pt_id", "src", "poly_id").collect()
         .map(r => (r.getLong(0), r.getString(1), r.getLong(2))).toSet
       assert(got === expected)

@@ -36,18 +36,19 @@ object ExplainProbe {
     val ways = graft.osmpbf.source.OsmPbf.ways(spark, pbfPath).toDF()
     val rels = graft.osmpbf.source.OsmPbf.relations(spark, pbfPath).toDF()
     val polys = graft.spatial.geom.Assembly.polygons(nodes, ways, rels)
-    show("GraftJob broadcast mode (expect BroadcastHashJoin on polygon side)",
-      graft.pipeline.GraftJob.run(images, polys, mode = "broadcast"))
-    show("GraftJob salted mode (expect shuffle join keyed (cell, salt_id))",
-      graft.pipeline.GraftJob.run(images, polys, mode = "salted", salt = 4))
-    // hot-cell-targeted salting: the occupancy-count subtree feeds TWO
-    // broadcast probes (polygon marking + point marking). The static plan
-    // shows both; at runtime AQE's stage reuse must collapse the second
-    // into a reused broadcast stage — check the FINAL adaptive plan.
+    show("GraftJob, default broadcast threshold (expect BroadcastHashJoin on cell, no salt_id)",
+      graft.pipeline.GraftJob.run(images, polys))
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    show("GraftJob, broadcast threshold -1 (expect shuffle join keyed (cell, salt_id))",
+      graft.pipeline.GraftJob.run(images, polys))
+    // the salted path's occupancy subtree feeds TWO broadcast probes
+    // (polygon marking + point marking). The static plan shows both; at
+    // runtime AQE's stage reuse must collapse the second into a reused
+    // broadcast stage — check the FINAL adaptive plan.
     val hotSalted = graft.spatial.join.SpatialJoin.pipJoin(
       graft.tiles.Tiles.assignPoints(images, 10).select("image_id", "lon", "lat"),
-      polys, res = 12, mode = "salted", salt = 4, hotCellThreshold = 50L)
-    show("pipJoin hot-cell salted (static: two occupancy subtrees; AQE reuses at runtime)",
+      polys, res = 12)
+    show("pipJoin salted, threshold -1 (static: two occupancy subtrees; AQE reuses at runtime)",
       hotSalted)
     // collect() (NOT count()) — count() builds a NEW QueryExecution over
     // groupBy().count(), leaving hotSalted.queryExecution unexecuted;
@@ -57,8 +58,9 @@ object ExplainProbe {
     val finalPlan = hotSalted.queryExecution.executedPlan.toString
     val bqsIds = "BroadcastQueryStage ([0-9]+)".r
       .findAllMatchIn(finalPlan).map(_.group(1)).toList
-    println(s"hot-cell salted FINAL adaptive plan: BroadcastQueryStage ids = $bqsIds " +
+    println(s"salted FINAL adaptive plan: BroadcastQueryStage ids = $bqsIds " +
       s"(a repeated id means AQE reused the occupancy broadcast — ONE scan+agg at runtime)")
+    spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
     val staged = s"/tmp/probe-staged"
     graft.util.HadoopIO.delete(staged, spark.sessionState.newHadoopConf())
