@@ -10,6 +10,7 @@ import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.sources.{DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -24,10 +25,10 @@ import scala.jdk.CollectionConverters._
   * Split planning is the Spark re-grounding of the reference's
   * `IndexedReader::build_index` + filtered stream (indexed_reader.rs:138-176,
   * :328-339): the driver scans only frame lengths (seeking over payloads),
-  * then packs blob pointers into ~`targetSplitBytes` input partitions;
-  * executors pread and decode their blobs independently (delta chains never
-  * cross a blob boundary — dense_nodes.rs semantics — so decode is
-  * embarrassingly parallel, SURVEY.md §1.2).
+  * then packs blob pointers into input partitions sized from the data
+  * ([[OsmPbfScan.splits]]); executors pread and decode their blobs
+  * independently (delta chains never cross a blob boundary — dense_nodes.rs
+  * semantics — so decode is embarrassingly parallel, SURVEY.md §1.2).
   *
   * Pushdown:
   *   - `kind = ...` equality filters prune whole blobs via the
@@ -40,8 +41,10 @@ import scala.jdk.CollectionConverters._
   *     are only materialized (string-table resolution, info parse) when the
   *     query actually reads them.
   *
-  * Options: `kind` (all|nodes|ways|relations|changesets),
-  * `targetSplitBytes` (default 33554432).
+  * Options: `path` (a file, directory or glob), `kind`
+  * (all|nodes|ways|relations|changesets), `permissive` (skip and count
+  * corrupt blobs instead of failing), `withFile` (append a `_file` column)
+  * and `fileNamePattern` (a regex every listed file name must match).
   */
 class OsmPbfSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "osmpbf"
@@ -260,13 +263,11 @@ class OsmPbfScan(options: CaseInsensitiveStringMap, requiredSchema: StructType,
       OsmPbfSource.fileNamePattern(options))
     OsmPbfScan.scanPointers(paths, confS,
       org.apache.spark.sql.SparkSession.active.sparkContext,
-      kindsMask, idMin, idMax, OsmPbfScan.indexScanThreshold(options))
+      kindsMask, idMin, idMax)
   }
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    val target = Option(options.get("targetSplitBytes")).map(_.toLong).getOrElse(32L * 1024 * 1024)
-    OsmPbfScan.pack(scannedPointers, target)
-  }
+  override def planInputPartitions(): Array[InputPartition] =
+    OsmPbfScan.splits(scannedPointers, org.apache.spark.sql.SparkSession.active)
 
   /** Post-pushdown size/row statistics from the blob index, so Catalyst can
     * auto-broadcast a small (or heavily pruned) PBF side of a join — the
@@ -322,10 +323,21 @@ class DecodeErrorsMetric extends org.apache.spark.sql.connector.metric.CustomSum
 }
 
 object OsmPbfScan {
-  /** Pack blob pointers into ~target-byte input splits, preserving file
-    * order (delta chains never cross a blob boundary, so any grouping is
-    * decode-safe; file order keeps reads sequential per partition). */
-  def pack(ptrs: Seq[BlobPointer], target: Long): Array[InputPartition] = {
+  /** Frame scans of at least this many files run on executors. */
+  private val DistributedScanFiles = 4
+
+  /** The batch and micro-batch split rule: blobs packed in file order into
+    * splits of about ceil(payload bytes / leaf-scan parallelism), capped at
+    * `spark.sql.files.maxPartitionBytes` (delta chains never cross a blob
+    * boundary, so any grouping is decode-safe; file order keeps reads
+    * sequential per split). */
+  def splits(ptrs: Seq[BlobPointer],
+      spark: org.apache.spark.sql.SparkSession): Array[InputPartition] = {
+    val conf = spark.sessionState.conf
+    val p = conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
+      .getOrElse(spark.sparkContext.defaultParallelism)
+    val target = math.min((ptrs.map(_.dataSize.toLong).sum + p - 1) / p,
+      conf.filesMaxPartitionBytes)
     val parts = mutable.ArrayBuffer.empty[InputPartition]
     val cur = mutable.ArrayBuffer.empty[BlobPointer]
     var curBytes = 0L
@@ -341,18 +353,17 @@ object OsmPbfScan {
   }
 
   /** Pushdown-pruned blob index over `paths` — THE shared scan for the batch
-    * and streaming planners (one implementation so split caps, sort order
-    * and threshold semantics cannot drift between them). Driver-side below
-    * `threshold` files; at or above it the frame scan distributes over
-    * executors (one seek per blob across a 100-TB directory is hours of
-    * driver time) and only the small pointer lists are collected. `sc` is
-    * by-name: the driver-side branch never touches a SparkContext. */
+    * and streaming planners (one implementation so sort order and the
+    * distribution rule cannot drift between them). Driver-side below
+    * [[DistributedScanFiles]] files; at or above it the frame scan
+    * distributes over executors (one seek per blob across a 100-TB
+    * directory is hours of driver time) and only the small pointer lists
+    * are collected. `sc` is by-name: the driver-side branch never touches a
+    * SparkContext. */
   def scanPointers(paths: Seq[String], confS: graft.util.SerializableHadoopConf,
       sc: => org.apache.spark.SparkContext, kindsMask: Int, idMin: Long,
-      idMax: Long, threshold: Int): Seq[BlobPointer] =
-    if (paths.isEmpty) Nil // a user threshold <= 0 would otherwise reach
-    // parallelize(Nil, 0), which rejects non-positive slice counts
-    else if (paths.size >= threshold) {
+      idMax: Long): Seq[BlobPointer] =
+    if (paths.size >= DistributedScanFiles) {
       // capture only primitives + the serializable conf — never a Scan/Stream
       val cs = confS
       val (km, lo, hi) = (kindsMask, idMin, idMax)
@@ -366,10 +377,6 @@ object OsmPbfScan {
       paths.flatMap(p => FrameScanner.scan(p, conf).blobs
         .filter(b => keepBlob(b, kindsMask, idMin, idMax)))
     }
-
-  /** Option shared by the batch and streaming planners. */
-  def indexScanThreshold(options: CaseInsensitiveStringMap): Int =
-    Option(options.get("indexScanThreshold")).map(_.toInt).getOrElse(4)
 
   /** Blob-level pushdown: kind counts + id zone maps (reference F5 fixed).
     * Static so the distributed index scan can ship it without capturing the
@@ -432,14 +439,11 @@ class OsmPbfMicroBatchStream(options: CaseInsensitiveStringMap,
     with org.apache.spark.sql.connector.read.streaming.SupportsTriggerAvailableNow {
   import org.apache.spark.sql.connector.read.streaming.{Offset, ReadLimit}
 
-  private val target =
-    Option(options.get("targetSplitBytes")).map(_.toLong).getOrElse(32L * 1024 * 1024)
-
   // captured at construction (driver-side, session guaranteed active) — the
-  // backlog scan below runs on the stream-execution thread, where relying on
-  // SparkSession.active would couple correctness to which thread Spark
-  // happens to plan micro-batches on
-  private val sc = org.apache.spark.sql.SparkSession.active.sparkContext
+  // backlog scan and split sizing below run on the stream-execution thread,
+  // where relying on SparkSession.active would couple correctness to which
+  // thread Spark happens to plan micro-batches on
+  private val spark = org.apache.spark.sql.SparkSession.active
 
   private val namePatternRe = OsmPbfSource.fileNamePattern(options).map(_.r)
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
@@ -540,9 +544,8 @@ class OsmPbfMicroBatchStream(options: CaseInsensitiveStringMap,
     // over executors instead of stalling the first trigger for hours on
     // driver-side seeks; steady-state triggers see a handful of new files
     // and stay driver-side.
-    val ptrs = OsmPbfScan.scanPointers(files, confS, sc, kindsMask, idMin,
-      idMax, OsmPbfScan.indexScanThreshold(options))
-    OsmPbfScan.pack(ptrs, target)
+    OsmPbfScan.splits(OsmPbfScan.scanPointers(files, confS, spark.sparkContext,
+      kindsMask, idMin, idMax), spark)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -173,33 +173,29 @@ object CheckpointedRunner {
         BucketResult(b, rows, wallMs, skipped = false)
     }
 
-    val results: Seq[BucketResult] =
-      if (parallelism <= 1 || buckets.size <= 1) buckets.map(runBucket)
-      else {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          math.min(parallelism, buckets.size))
-        val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
-        try {
-          val futures = buckets.map(b => pool.submit(new java.util.concurrent.Callable[BucketResult] {
-            def call(): BucketResult = {
-              if (aborted.get) throw new java.util.concurrent.CancellationException(
-                s"bucket $b not started: an earlier bucket failed")
-              try runBucket(b)
-              catch { case t: Throwable => aborted.set(true); throw t }
-            }
-          }))
-          // await ALL in bucket order (in-flight work finishes and keeps its
-          // markers), then rethrow the first real failure in bucket order
-          val outcomes = futures.map(f =>
-            try Right(f.get())
-            catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
-          outcomes.collectFirst {
-            case Left(t) if !t.isInstanceOf[java.util.concurrent.CancellationException] => t
-          }.foreach(throw _)
-          outcomes.collectFirst { case Left(t) => t }.foreach(throw _) // all-cancelled edge
-          outcomes.collect { case Right(r) => r }
-        } finally pool.shutdown()
-      }
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(
+      math.max(1, math.min(parallelism, buckets.size)))
+    val aborted = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val results: Seq[BucketResult] = try {
+      val futures = buckets.map(b => pool.submit(new java.util.concurrent.Callable[BucketResult] {
+        def call(): BucketResult = {
+          if (aborted.get) throw new java.util.concurrent.CancellationException(
+            s"bucket $b not started: an earlier bucket failed")
+          try runBucket(b)
+          catch { case t: Throwable => aborted.set(true); throw t }
+        }
+      }))
+      // await ALL in bucket order (in-flight work finishes and keeps its
+      // markers), then rethrow the first real failure in bucket order
+      val outcomes = futures.map(f =>
+        try Right(f.get())
+        catch { case e: java.util.concurrent.ExecutionException => Left(e.getCause) })
+      outcomes.collectFirst {
+        case Left(t) if !t.isInstanceOf[java.util.concurrent.CancellationException] => t
+      }.foreach(throw _)
+      outcomes.collectFirst { case Left(t) => t }.foreach(throw _) // all-cancelled edge
+      outcomes.collect { case Right(r) => r }
+    } finally pool.shutdown()
     // aggregate metrics for the whole OUTPUT (skipped buckets contribute
     // their marker-recorded rows — the file describes the dataset under
     // outDir, not just this invocation's work); wall_ms covers only the

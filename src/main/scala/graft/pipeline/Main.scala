@@ -39,7 +39,7 @@ object Main {
     val nodes = OsmPbf.nodes(spark, pbfPath).toDF()
     val ways = OsmPbf.ways(spark, pbfPath).toDF()
     val rels = OsmPbf.relations(spark, pbfPath).toDF()
-    val polys = Assembly.polygons(nodes, ways, rels).localCheckpoint()
+    val polys = Assembly.polygons(nodes, ways, rels)
     // one cover explosion shared by every bucket job (the per-bucket joins
     // would otherwise each re-explode the full polygon set at `res`)
     val polyCells = graft.spatial.join.SpatialJoin

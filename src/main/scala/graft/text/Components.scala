@@ -126,13 +126,9 @@ object Components {
       // convergence. The checkpoint blocks of BOTH rounds stay tracked and
       // are freed in the finally.
       if (it % 2 == 0 || it == maxIter) {
-        val t0 = System.nanoTime()
         val changed = jumped
           .agg(coalesce(sum(when(col("comp") =!= col("_prev"), 1L).otherwise(0L)), lit(0L)))
           .head.getLong(0)
-        if (sys.env.contains("GRAFT_CC_VERBOSE"))
-          System.err.println(s"[cc] it=$it changed=$changed " +
-            s"tookMs=${(System.nanoTime() - t0) / 1000000}")
         if (changed == 0L) {
           // materialize the result's own blocks; the finally below frees
           // the rest

@@ -104,11 +104,12 @@ class ReplicationSpec extends AnyFunSuite with SparkTestBase {
 
   test("diffStream over a BACKLOG distributes the frame scan and loses nothing") {
     // a stream started against a queued-up directory hits the distributed
-    // index-scan path (files ≥ indexScanThreshold) inside the micro-batch
-    // planner thread — the exact context where resolving the session lazily
-    // would be fragile; the SparkContext is captured at stream construction
+    // index-scan path (files ≥ OsmPbfScan.DistributedScanFiles) inside the
+    // micro-batch planner thread — the exact context where resolving the
+    // session lazily would be fragile; the session is captured at stream
+    // construction
     val dir = s"$tmpDir/replication/backlog-diffs"
-    val nSeqs = 6L // > the default indexScanThreshold of 4
+    val nSeqs = 6L // > OsmPbfScan.DistributedScanFiles (4)
     (1L to nSeqs).foreach { s =>
       writeDiff(dir, s, Seq(node(100L + s, 1, s"b-$s"), node(200L + s, 1, s"c-$s")))
     }

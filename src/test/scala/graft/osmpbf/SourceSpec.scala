@@ -245,6 +245,41 @@ class SourceSpec extends AnyFunSuite with SparkTestBase {
     assert(n === w1.nodes.size + w2.nodes.size)
   }
 
+  test("splits are sized from the data: several per multi-blob file, at most one per blob") {
+    import graft.osmpbf.codec.{FrameScanner, PbfCodec, PbfFile}
+    import graft.osmpbf.source.{OsmPbfPartition, OsmPbfScan}
+    val multi = s"$tmpDir/split_multi.osm.pbf"
+    OsmWorld.writePbf(multi, world, elementsPerBlock = 50)
+    val conf = spark.sessionState.newHadoopConf()
+    val blobs = FrameScanner.scan(multi, conf).blobs.filter(_.blobType == "OSMData")
+    def splits(df: org.apache.spark.sql.Dataset[_]): Seq[Seq[Long]] =
+      df.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          s.inputPartitions.map(_.asInstanceOf[OsmPbfPartition].blobs.map(_.headerOffset).toSeq)
+      }.getOrElse(fail("no BatchScanExec in the executed plan"))
+
+    // every data blob, in file order, split across the suite's cores
+    val all = splits(OsmPbf.raw(spark, multi))
+    assert(spark.sparkContext.defaultParallelism > 1)
+    assert(all.size > 1, s"${blobs.size} blobs read as one split")
+    assert(all.size <= blobs.size)
+    assert(all.flatten === blobs.map(_.headerOffset))
+
+    // rows are those of the single-threaded reader, whatever the grouping
+    val decoded = PbfFile.read(multi, conf = conf)
+    assert(OsmPbf.nodes(spark, multi).collect().toSet === decoded.nodes.toSet)
+    assert(OsmPbf.ways(spark, multi).collect().toSet === decoded.ways.toSet)
+    assert(OsmPbf.relations(spark, multi).collect().toSet === decoded.relations.toSet)
+
+    // a kind-pruned scan splits only the blobs that hold that kind
+    val wayBlobs = blobs.filter(b =>
+      OsmPbfScan.keepBlob(b, PbfCodec.KindWay, Long.MinValue, Long.MaxValue))
+    assert(wayBlobs.nonEmpty && wayBlobs.size < blobs.size)
+    val waySplits = splits(OsmPbf.ways(spark, multi))
+    assert(waySplits.flatten === wayBlobs.map(_.headerOffset))
+    assert(waySplits.size <= wayBlobs.size)
+  }
+
   test("permissive mode skips only the corrupt blob and the metric is registered") {
     import graft.osmpbf.codec.{FrameScanner, PbfCodec}
     import graft.osmpbf.source.{OsmPbfScan, OsmPbfSource}

@@ -28,13 +28,36 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
 
   test("join rows identical across salted and broadcast modes") {
     // the default threshold broadcasts the small fixture; -1 forces both
-    // sides to shuffle, so pipJoin takes its hot-cell salted path
-    def rows = GraftJob.joinRows(images, polys)
-      .collect().map(r => (r.getString(0), r.getString(2), r.getLong(3))).toSet
-    val broadcast = rows
+    // sides to shuffle, so pipJoin salts every res-12 cell holding more
+    // than N/P of the N points (P = shuffle partitions). Copies of one hit
+    // image, 1e-7 degrees apart, make its cell such a hot cell.
+    import spark.implicits._
+    val p = spark.sessionState.conf.numShufflePartitions
+    val base = images.select("image_id", "lon", "lat")
+    val n = base.count()
+    val anchor = GraftJob.joinRows(base, polys).select("image_id").head.getString(0)
+    val anchorRow = base.where(col("image_id") === anchor).head
+    val (lon, lat) = (anchorRow.getDouble(1), anchorRow.getDouble(2))
+    val copies = n / (p - 1) + 1
+    val pts = base.union((0L until copies)
+      .map(i => (s"hot_$i", lon + i * 1e-7, lat + i * 1e-7)).toDF("image_id", "lon", "lat"))
+    val hotCells = pts.groupBy(graft.spatial.cell.functions.cell_of(col("lon"), col("lat"), 12))
+      .count().where(col("count") * p > n + copies).count()
+    assert(hotCells === 1L, s"no res-12 cell holds more than ${n + copies}/$p points")
+
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getString(0), r.getString(2), r.getLong(3))).toSet
+    val broadcast = rows(GraftJob.joinRows(pts, polys))
     val thresholdWas = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    val salted = try rows finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
+    val saltedDf = GraftJob.joinRows(pts, polys)
+    val salted = try rows(saltedDf) finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresholdWas)
+    val joinKeys = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collect(saltedDf.queryExecution.executedPlan) {
+        case j: org.apache.spark.sql.execution.joins.BaseJoinExec =>
+          (j.leftKeys ++ j.rightKeys).flatMap(_.references.map(_.name))
+      }.flatten
+    assert(joinKeys.contains("salt_id"), saltedDf.queryExecution.executedPlan.toString)
     assert(salted === broadcast)
     assert(salted.nonEmpty)
   }
