@@ -448,7 +448,7 @@ object SparkEntry {
     "p10_stream_graft" -> ((s, dir) => {
       // streaming graft: the images fixture replayed as a file stream
       // (several micro-batches) × static polygons via foreachBatch
-      // incremental tile deltas; the returned rollup is the additive fold.
+      // incremental tile deltas; the returned rollup merges them.
       // StreamingGraftSpec proves rollup ≡ batch job + retry idempotence;
       // rows here = tiles with ≥1 image (same population as p6)
       val path = imagesPath(s, dir)

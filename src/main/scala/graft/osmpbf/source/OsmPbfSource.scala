@@ -326,30 +326,26 @@ object OsmPbfScan {
   /** Frame scans of at least this many files run on executors. */
   private val DistributedScanFiles = 4
 
-  /** The batch and micro-batch split rule: blobs packed in file order into
-    * splits of about ceil(payload bytes / leaf-scan parallelism), capped at
-    * `spark.sql.files.maxPartitionBytes` (delta chains never cross a blob
-    * boundary, so any grouping is decode-safe; file order keeps reads
-    * sequential per split). */
+  /** The batch and micro-batch split rule: blobs in file order, cut at
+    * the payload offsets k·target, target = min(ceil(payload bytes /
+    * leaf-scan parallelism p), `spark.sql.files.maxPartitionBytes`). A
+    * split holds the blobs that start in its window, so there are at most
+    * p splits and a split passes target by at most one blob (delta chains
+    * never cross a blob boundary, so any grouping is decode-safe; file
+    * order keeps reads sequential per split). */
   def splits(ptrs: Seq[BlobPointer],
       spark: org.apache.spark.sql.SparkSession): Array[InputPartition] = {
     val conf = spark.sessionState.conf
     val p = conf.getConf(SQLConf.LEAF_NODE_DEFAULT_PARALLELISM)
       .getOrElse(spark.sparkContext.defaultParallelism)
-    val target = math.min((ptrs.map(_.dataSize.toLong).sum + p - 1) / p,
-      conf.filesMaxPartitionBytes)
-    val parts = mutable.ArrayBuffer.empty[InputPartition]
-    val cur = mutable.ArrayBuffer.empty[BlobPointer]
-    var curBytes = 0L
-    ptrs.foreach { ptr =>
-      if (curBytes + ptr.dataSize > target && cur.nonEmpty) {
-        parts += OsmPbfPartition(cur.toArray)
-        cur.clear(); curBytes = 0L
-      }
-      cur += ptr; curBytes += ptr.dataSize
-    }
-    if (cur.nonEmpty) parts += OsmPbfPartition(cur.toArray)
-    parts.toArray
+    val blobs = ptrs.toArray
+    val starts = blobs.scanLeft(0L)(_ + _.dataSize)
+    val target = math.max(1L, math.min((starts.last + p - 1) / p, conf.filesMaxPartitionBytes))
+    val cuts = blobs.indices.filter(i => i > 0 && starts(i) / target != starts(i - 1) / target)
+    if (blobs.isEmpty) Array.empty
+    else (0 +: cuts).zip(cuts :+ blobs.length)
+      .map { case (from, until) => OsmPbfPartition(blobs.slice(from, until)): InputPartition }
+      .toArray
   }
 
   /** Pushdown-pruned blob index over `paths` — THE shared scan for the batch

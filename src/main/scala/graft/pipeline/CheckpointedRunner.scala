@@ -150,7 +150,11 @@ object CheckpointedRunner {
       writeMetrics(PipelineMetrics(0, 0, 0, 0L, 0L, lineage))
       return Seq.empty
     }
-    val staged = spark.read.parquet(stagedDir)
+    // read with the schema the staging wrote, not one inferred from a
+    // parquet footer (inference runs a Spark job of its own)
+    val staged = spark.read.schema(org.apache.spark.sql.types.StructType(
+      tiled.schema.fields.map(_.copy(nullable = true)))
+      .add("_bucket", org.apache.spark.sql.types.LongType)).parquet(stagedDir)
 
     // a skipped bucket reports the rows its marker recorded, so resumed
     // runs still aggregate to whole-dataset metrics (round-5 review: a

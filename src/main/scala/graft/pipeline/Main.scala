@@ -46,7 +46,9 @@ object Main {
       .preparedPolygonCells(polys, res).localCheckpoint()
 
     val tiled = Tiles.assignPoints(images.select("image_id", "lon", "lat"), z)
-    val lineage = s"images-snapshot=$snapshot pbf=$pbfPath z=$z res=$res"
+    // `rollup=` names the bucket output format: an output dir written in
+    // another format re-stages and re-runs instead of mixing schemas
+    val lineage = s"images-snapshot=$snapshot pbf=$pbfPath z=$z res=$res rollup=hll-sketch"
     val results = CheckpointedRunner.run(spark, tiled, outDir,
       slice => {
         val hits = graft.spatial.join.SpatialJoin.pipJoin(slice, polys,

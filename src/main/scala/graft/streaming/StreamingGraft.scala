@@ -17,17 +17,24 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * not expressible as a single incremental streaming plan (two stateful
   * aggs feeding a join). The supported Spark idiom is `foreachBatch`:
   * each micro-batch runs the (already scale-disciplined) batch job over
-  * the NEW images only and appends that batch's per-tile DELTAS; the
-  * additive rollup (sum of deltas ≡ full recompute, proven in
-  * PipelineSpec's incremental-maintenance test) folds them on read, or
-  * periodically into a compacted snapshot via [[compact]] so per-rollup
-  * cost stays O(tiles + batches-since-last-compact), not O(all batches).
+  * the NEW images only and appends that batch's per-tile DELTAS — the
+  * batch job's own rollup ([[GraftJob.tileRollup]]). Deltas merge: counts
+  * sum and the `polys_sketch` HLL sketches union (merged ≡ full recompute,
+  * proven in PipelineSpec's incremental-maintenance test). They are folded
+  * on read, or periodically into a compacted snapshot via [[compact]] so
+  * per-rollup cost stays O(tiles + batches-since-last-compact), not
+  * O(all batches). Deltas, snapshots and [[rollup]] all have
+  * [[GraftJob.RollupSchema]].
   *
   * Exactly-once: deltas land in a `batch_id=<id>` partition written with
   * dynamic partition overwrite, so a retried micro-batch REPLACES its own
   * partition instead of double-counting — idempotent per batch id, the
-  * standard foreachBatch sink contract. The distinct-poly sketch is
-  * excluded (not additive), as in the batch incremental proof.
+  * standard foreachBatch sink contract.
+  *
+  * A delta dir written before the rollup carried `polys_sketch` (deltas
+  * of `n_images`/`n_hits` only) cannot be folded: [[rollup]] and
+  * [[compact]] fail on the missing column. Delete it and restart the
+  * stream from a fresh checkpoint.
   */
 object StreamingGraft {
 
@@ -63,15 +70,15 @@ object StreamingGraft {
     // either side's size estimate fits the broadcast threshold, pipJoin's
     // per-batch delta is a broadcast join with zero shuffle of the batch,
     // instead of a hot-cell occupancy count + (cell, salt) shuffle per batch
-    GraftJob.runAdditive(batch, polys, z = z, res = res)
+    GraftJob.run(batch, polys, z = z, res = res)
       .withColumn("batch_id", lit(batchId))
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
       .parquet(deltaDir)
 
-  /** Current tile stats = latest compacted snapshot (if any) + additive
-    * fold of the delta partitions NEWER than it. An empty source (no
+  /** Current tile stats = latest compacted snapshot (if any) merged with
+    * the delta partitions NEWER than it. An empty source (no
     * micro-batch ever fired, so no delta dir exists) is empty stats, not a
     * missing-path error.
     *
@@ -84,23 +91,11 @@ object StreamingGraft {
     val conf = spark.sessionState.newHadoopConf()
     val w = latestSnapshotVersion(deltaDir, conf)
     val tail = deltaBatchIds(deltaDir, conf).filter(_ > w)
-    foldStats(spark, deltaDir, w, tail).getOrElse(
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], StatsSchema))
+    foldStats(spark, deltaDir, w, tail).getOrElse(spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], GraftJob.RollupSchema))
   }
 
-  /** The delta/rollup stats schema — GraftJob.tileRollup's output minus the
-    * non-additive distinct-poly sketch, exactly what [[writeBatchDelta]]
-    * persists. One definition, so the never-fired-a-batch rollup cannot
-    * drift from the real write path's shape (StreamingGraftSpec asserts the
-    * empty and non-empty rollup schemas agree). */
-  private[streaming] val StatsSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(StructField("tile", LongType), StructField("tile_z", IntegerType),
-      StructField("tile_x", IntegerType), StructField("tile_y", IntegerType),
-      StructField("n_images", LongType), StructField("n_hits", LongType)))
-  }
-
-  /** snapshot(v) + additive fold of the PINNED `tail` partition list, or
+  /** snapshot(v) + merge of the PINNED `tail` partition list, or
     * None when both are absent. The ONE fold implementation, shared by
     * `rollup` (read path) and `compact` (write path) so the aggregation
     * shape — and therefore snapshot ≡ folded-deltas equivalence — cannot
@@ -117,9 +112,10 @@ object StreamingGraft {
       else None
     ).flatten
     if (parts.isEmpty) None
-    else Some(parts.reduce(_ unionByName _)
+    else Some(GraftJob.withDistinctPolys(parts.reduce(_ unionByName _)
       .groupBy("tile", "tile_z", "tile_x", "tile_y")
-      .agg(sum("n_images").as("n_images"), sum("n_hits").as("n_hits")))
+      .agg(sum("n_images").as("n_images"), sum("n_hits").as("n_hits"),
+        hll_union_agg(col("polys_sketch")).as("polys_sketch"))))
   }
 
   /** Fold every delta partition written so far (plus the previous

@@ -100,15 +100,26 @@ object ImageTable {
   /** Snapshot read THROUGH the manifest (not a directory listing) — the
     * Iceberg contract that makes fast appends and incremental reads work:
     * a snapshot is its file list, and files are shared across snapshots. */
-  def loadSnapshot(spark: SparkSession, root: String, snapshotId: Long): DataFrame =
-    readFiles(spark, manifest(spark, root, snapshotId))
+  def loadSnapshot(spark: SparkSession, root: String, snapshotId: Long): DataFrame = {
+    val meta = readMetadata(root, snapshotId, spark.sessionState.newHadoopConf())
+    readFiles(spark, meta, meta.manifest.map(_.path))
+  }
 
-  /** Parquet read of exact manifest paths. Spark glob-expands read paths,
-    * so glob characters in a path (a root holding `\`, `[` or `*`) are
-    * escaped: each path names one file, never a pattern. */
-  private def readFiles(spark: SparkSession, paths: Seq[String]): DataFrame =
-    spark.read.parquet(paths.map(_.flatMap(c =>
+  /** Parquet read of exact manifest paths with the schema `meta` records
+    * (no footer read to infer it, and no paths is an empty frame). The
+    * recorded schema keeps the writer's nullable=false flags; parquet
+    * read-back reports every column nullable, so the read does too. Spark
+    * glob-expands read paths, so glob characters in a path (a root
+    * holding `\`, `[` or `*`) are escaped: each path names one file,
+    * never a pattern. */
+  private def readFiles(spark: SparkSession, meta: Metadata,
+      paths: Seq[String]): DataFrame = {
+    val recorded = org.apache.spark.sql.types.DataType.fromJson(meta.schema)
+      .asInstanceOf[org.apache.spark.sql.types.StructType]
+    val schema = org.apache.spark.sql.types.StructType(recorded.fields.map(_.copy(nullable = true)))
+    spark.read.schema(schema).parquet(paths.map(_.flatMap(c =>
       if ("\\{}[]*?".indexOf(c) >= 0) s"\\$c" else c.toString)): _*)
+  }
 
   /** Fast append (Iceberg-style): writes ONLY the new rows as data files,
     * then records a new snapshot whose manifest is the parent's file list
@@ -415,28 +426,10 @@ object ImageTable {
     * without ever rescanning history. */
   def readIncremental(spark: SparkSession, root: String,
       fromSnapshot: Long, toSnapshot: Long): DataFrame = {
-    val before = manifest(spark, root, fromSnapshot).toSet
-    val delta = manifest(spark, root, toSnapshot).filterNot(before)
-    if (delta.isEmpty)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        snapshotSchema(spark, root, toSnapshot))
-    else readFiles(spark, delta)
-  }
-
-  /** The schema recorded in a snapshot's metadata JSON. The empty-delta
-    * branch above used to materialize loadSnapshot(...).schema — parquet
-    * footer reads over EVERY file of the snapshot, I/O proportional to
-    * table size for an operation returning zero rows; the metadata file
-    * already embeds the schema. */
-  private def snapshotSchema(spark: SparkSession, root: String,
-      snapshotId: Long): org.apache.spark.sql.types.StructType = {
-    val st = org.apache.spark.sql.types.DataType.fromJson(
-      readMetadata(root, snapshotId, spark.sessionState.newHadoopConf()).schema)
-      .asInstanceOf[org.apache.spark.sql.types.StructType]
-    // parquet read-back reports every column nullable; the recorded schema
-    // keeps the writer's nullable=false flags — align to the read-back
-    // shape so an empty delta unions/compares cleanly with a real one
-    org.apache.spark.sql.types.StructType(st.fields.map(_.copy(nullable = true)))
+    val conf = spark.sessionState.newHadoopConf()
+    val before = readMetadata(root, fromSnapshot, conf).manifest.map(_.path).toSet
+    val to = readMetadata(root, toSnapshot, conf)
+    readFiles(spark, to, to.manifest.map(_.path).filterNot(before))
   }
 
   /** Per-row image parity check vs the deterministic generator

@@ -264,6 +264,11 @@ class SourceSpec extends AnyFunSuite with SparkTestBase {
     assert(all.size > 1, s"${blobs.size} blobs read as one split")
     assert(all.size <= blobs.size)
     assert(all.flatten === blobs.map(_.headerOffset))
+    // one wave: never more splits than the scan's parallelism, however
+    // the blob sizes divide the payload
+    val p = spark.sparkContext.defaultParallelism
+    assert(blobs.size >= p, s"fixture has ${blobs.size} blobs, fewer than $p cores")
+    assert(all.size <= p, s"${blobs.size} blobs read as ${all.size} splits at parallelism $p")
 
     // rows are those of the single-threaded reader, whatever the grouping
     val decoded = PbfFile.read(multi, conf = conf)

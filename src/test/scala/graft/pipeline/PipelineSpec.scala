@@ -359,12 +359,12 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
   }
 
   test("incremental tile maintenance: base + appended delta == full recompute") {
-    import org.apache.spark.sql.functions.col
-    // the ImageTable append/incremental-read surface drives the additive
-    // tile aggregation incrementally: run the graft job on the base
-    // snapshot once, on the delta only, and sum — no history rescan, same
-    // totals as a full recompute (n_images/n_hits are additive counts;
-    // n_distinct_polys is an approx sketch and deliberately excluded)
+    import org.apache.spark.sql.functions.{col, hll_sketch_estimate, hll_union_agg, sum}
+    // the ImageTable append/incremental-read surface drives the tile
+    // rollup incrementally: run the graft job on the base snapshot once,
+    // on the delta only, and merge — no history rescan, same result as a
+    // full recompute (n_images/n_hits sum; n_distinct_polys is the estimate
+    // of the union of the per-tile polys_sketch HLL sketches)
     val root = s"$tmpDir/inc-images"
     graft.tiles.ImageTable.write(images, root, snapshotId = 1L)
     val delta = Images.synthesize(spark, 600, world.clusterCenters, 4)
@@ -373,15 +373,16 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     graft.tiles.ImageTable.append(delta, root)
     def tiles(df: org.apache.spark.sql.DataFrame) =
       GraftJob.run(df, polys, z = 10, res = 12)
-        .select("tile", "n_images", "n_hits")
     val base = tiles(graft.tiles.ImageTable.loadSnapshot(spark, root, 1L))
     val inc = tiles(graft.tiles.ImageTable.readIncremental(spark, root, 1L, 2L))
     val merged = base.unionByName(inc).groupBy("tile")
-      .agg(org.apache.spark.sql.functions.sum("n_images").as("n_images"),
-        org.apache.spark.sql.functions.sum("n_hits").as("n_hits"))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    val full = tiles(graft.tiles.ImageTable.load(spark, root))
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    assert(merged === full)
+      .agg(sum("n_images").as("n_images"), sum("n_hits").as("n_hits"),
+        hll_sketch_estimate(hll_union_agg(col("polys_sketch"))).as("n_distinct_polys"))
+    def asMap(df: org.apache.spark.sql.DataFrame) =
+      df.select("tile", "n_images", "n_hits", "n_distinct_polys").collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val full = asMap(tiles(graft.tiles.ImageTable.load(spark, root)))
+    assert(full.values.exists(_._3 > 0L))
+    assert(asMap(merged) === full)
   }
 }

@@ -3,9 +3,10 @@ package graft.streaming
 import graft.SparkTestBase
 import graft.fixtures.OsmWorld
 import graft.osmpbf.source.OsmPbf
-import graft.pipeline.GraftJob
+import graft.pipeline.{CheckpointedRunner, GraftJob}
 import graft.spatial.geom.Assembly
-import graft.tiles.Images
+import graft.spatial.join.SpatialJoin
+import graft.tiles.{Images, Tiles}
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -19,6 +20,13 @@ class StreamingGraftSpec extends AnyFunSuite with SparkTestBase {
     val rels = OsmPbf.relations(spark, pbfPath).toDF()
     Assembly.polygons(nodes, ways, rels).localCheckpoint()
   }
+
+  /** Per-tile (n_images, n_hits, n_distinct_polys): the streamed fold must
+    * equal the batch job in all three, the merged sketch included. */
+  private def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
+    .map(r => r.getAs[Long]("tile") ->
+      ((r.getAs[Long]("n_images"), r.getAs[Long]("n_hits"), r.getAs[Long]("n_distinct_polys"))))
+    .toMap
 
   test("streamed batches fold to the batch graft job's tile stats; retries are idempotent") {
     val all = Images.synthesize(spark, 400, world.clusterCenters, 4).cache()
@@ -38,26 +46,42 @@ class StreamingGraftSpec extends AnyFunSuite with SparkTestBase {
     // at least two batch partitions landed
     val batches = spark.read.parquet(deltaDir).select("batch_id").distinct().count()
     assert(batches >= 2, s"expected >=2 micro-batches, got $batches")
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[Long]("tile") -> ((r.getAs[Long]("n_images"), r.getAs[Long]("n_hits"))))
-      .toMap
     val streamed = asMap(StreamingGraft.rollup(spark, deltaDir))
-    val batch = asMap(GraftJob.run(all, polys, z = 10, res = 12)
-      .select(col("tile"), col("tile_z"), col("tile_x"), col("tile_y"),
-        col("n_images"), col("n_hits")))
-    assert(streamed === batch, "additive fold of streamed deltas != batch recompute")
+    val batch = asMap(GraftJob.run(all, polys, z = 10, res = 12))
+    assert(batch.values.exists(_._3 > 1L), "fixture has no tile with several polygons")
+    assert(streamed === batch, "merge of streamed deltas != batch recompute")
     // retry semantics: re-running a batch with the SAME id replaces its
     // partition — totals unchanged (the at-least-once foreachBatch contract)
     StreamingGraft.writeBatchDelta(slice(0, 250), polys, deltaDir, batchId = 0L, z = 10, res = 12)
     assert(asMap(StreamingGraft.rollup(spark, deltaDir)) === batch,
       "retried micro-batch double-counted its delta")
-    // the never-fired-a-batch rollup must return the SAME schema as a real
-    // one (its empty branch uses the shared StatsSchema constant — a
-    // hand-written literal there drifts silently from the write path)
+    // one rollup schema: the batch job, the empty and the non-empty
+    // streamed rollup, and a Main-shaped checkpointed bucket output (less
+    // its `bucket` partition column) have the same field names and types
     val emptyRollup = StreamingGraft.rollup(spark, s"$tmpDir/sg-never-written")
-    assert(emptyRollup.schema.fieldNames.toSeq ===
-      StreamingGraft.rollup(spark, deltaDir).schema.fieldNames.toSeq)
     assert(emptyRollup.count() === 0)
+    val outDir = s"$tmpDir/sgraft-main-shaped"
+    CheckpointedRunner.run(spark, Tiles.assignPoints(all.select("image_id", "lon", "lat"), 10),
+      outDir, slice => GraftJob.tileRollup(slice, SpatialJoin.pipJoin(slice, polys, res = 12)),
+      bucketRes = 2, lineage = "schema-check")
+    def fields(schema: org.apache.spark.sql.types.StructType) = schema.map(f => f.name -> f.dataType)
+    Seq("GraftJob.run" -> GraftJob.run(all, polys, z = 10, res = 12),
+      "empty rollup" -> emptyRollup,
+      "rollup" -> StreamingGraft.rollup(spark, deltaDir),
+      "bucket outputs" -> CheckpointedRunner.readOutput(spark, outDir).drop("bucket"))
+      .foreach { case (what, df) => assert(fields(df.schema) === fields(GraftJob.RollupSchema), what) }
+    assert(asMap(CheckpointedRunner.readOutput(spark, outDir)) === batch,
+      "bucket outputs != batch recompute")
+  }
+
+  test("a delta dir without polys_sketch fails rollup and compact instead of dropping the count") {
+    // the delta shape before the rollup kept its sketch: counts only
+    val deltaDir = s"$tmpDir/sgraft-counts-only-delta"
+    spark.range(3).select(col("id").as("tile"), lit(10).as("tile_z"), lit(0).as("tile_x"),
+        lit(0).as("tile_y"), lit(1L).as("n_images"), lit(0L).as("n_hits"), lit(0L).as("batch_id"))
+      .write.partitionBy("batch_id").parquet(deltaDir)
+    intercept[org.apache.spark.sql.AnalysisException](StreamingGraft.rollup(spark, deltaDir))
+    intercept[org.apache.spark.sql.AnalysisException](StreamingGraft.compact(spark, deltaDir))
   }
 
   test("compact folds deltas into a snapshot; rollup, retries and GC stay correct") {
@@ -65,9 +89,6 @@ class StreamingGraftSpec extends AnyFunSuite with SparkTestBase {
     def slice(lo: Long, hi: Long) = all.where(
       col("image_id") >= Images.idString(lo) && col("image_id") < Images.idString(hi))
     val deltaDir = s"$tmpDir/sgraft-compact-delta"
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[Long]("tile") -> ((r.getAs[Long]("n_images"), r.getAs[Long]("n_hits"))))
-      .toMap
     def deltaPartitions(): Seq[String] = {
       val fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sessionState.newHadoopConf())
       val p = new org.apache.hadoop.fs.Path(deltaDir)
@@ -83,17 +104,13 @@ class StreamingGraftSpec extends AnyFunSuite with SparkTestBase {
     StreamingGraft.writeBatchDelta(slice(100, 200), polys, deltaDir, batchId = 1L, z = 10, res = 12)
     assert(StreamingGraft.compact(spark, deltaDir) === 1L)
     assert(deltaPartitions().isEmpty, "compact must GC folded batch partitions")
-    val firstTwo = asMap(GraftJob.run(slice(0, 200), polys, z = 10, res = 12)
-      .select(col("tile"), col("tile_z"), col("tile_x"), col("tile_y"),
-        col("n_images"), col("n_hits")))
+    val firstTwo = asMap(GraftJob.run(slice(0, 200), polys, z = 10, res = 12))
     assert(asMap(StreamingGraft.rollup(spark, deltaDir)) === firstTwo,
       "rollup after compact != batch recompute of folded batches")
 
     // stream continues past the snapshot: rollup = snapshot + tail
     StreamingGraft.writeBatchDelta(slice(200, 300), polys, deltaDir, batchId = 2L, z = 10, res = 12)
-    val full = asMap(GraftJob.run(all, polys, z = 10, res = 12)
-      .select(col("tile"), col("tile_z"), col("tile_x"), col("tile_y"),
-        col("n_images"), col("n_hits")))
+    val full = asMap(GraftJob.run(all, polys, z = 10, res = 12))
     assert(asMap(StreamingGraft.rollup(spark, deltaDir)) === full,
       "rollup over snapshot + tail deltas != full batch recompute")
 
@@ -141,12 +158,7 @@ class StreamingGraftSpec extends AnyFunSuite with SparkTestBase {
     val q = StreamingGraft.run(stream, polys, deltaDir, s"$tmpDir/sgraft-auto-ckpt",
       z = 10, res = 12, compactEvery = 2)
     q.awaitTermination()
-    def asMap(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => r.getAs[Long]("tile") -> ((r.getAs[Long]("n_images"), r.getAs[Long]("n_hits"))))
-      .toMap
-    val batch = asMap(GraftJob.run(all, polys, z = 10, res = 12)
-      .select(col("tile"), col("tile_z"), col("tile_x"), col("tile_y"),
-        col("n_images"), col("n_hits")))
+    val batch = asMap(GraftJob.run(all, polys, z = 10, res = 12))
     assert(asMap(StreamingGraft.rollup(spark, deltaDir)) === batch,
       "rollup after in-stream compaction != batch recompute")
     // a snapshot exists and the folded batch partitions are gone
