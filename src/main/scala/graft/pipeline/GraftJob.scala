@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   *
   * Steps (all declarative — Catalyst plans the physical strategy):
   *   1. images → tile assignment at zoom `z` (codegen cell encode);
-  *   2. images × polygons PIP join (cell equi-join at `res` + exact
-  *      ray-cast; [[SpatialJoin.pipJoin]] picks broadcast or hot-cell
+  *   2. images × polygons PIP join (cell equi-join at `res`, ray-cast
+  *      outside interior cells; [[SpatialJoin.pipJoin]] picks broadcast or hot-cell
   *      salting from the data);
   *   3. per-tile aggregation of join hits (partial agg map-side).
   *

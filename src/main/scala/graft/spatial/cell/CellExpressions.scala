@@ -5,7 +5,7 @@ import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 
 /** Native Catalyst expressions for the spatial hot path (north_star:
@@ -123,25 +123,26 @@ object GeomEval {
     inside
   }
 
-  /** Liang–Barsky: does segment (x1,y1)-(x2,y2) intersect the axis-aligned
-    * rectangle [minX,maxX]×[minY,maxY]? Used for polygon↔tile boundary
-    * tests (a tile is touched by a polygon iff an edge crosses it or the
-    * tile center is inside). */
+  /** Liang–Barsky: does segment (x1,y1)-(x2,y2) meet the closed rectangle
+    * [minX,maxX]×[minY,maxY]? Step i clips the segment's parameter
+    * interval [t0, t1] against one side: p is the segment's rate toward it,
+    * q its start's distance inside it. p and q are picked per step, so the
+    * cover's cells × edges loop allocates nothing. */
   def segmentIntersectsRect(x1: Double, y1: Double, x2: Double, y2: Double,
       minX: Double, minY: Double, maxX: Double, maxY: Double): Boolean = {
     val dx = x2 - x1
     val dy = y2 - y1
     var t0 = 0.0
     var t1 = 1.0
-    val p = Array(-dx, dx, -dy, dy)
-    val q = Array(x1 - minX, maxX - x1, y1 - minY, maxY - y1)
     var i = 0
     while (i < 4) {
-      if (p(i) == 0.0) {
-        if (q(i) < 0.0) return false
+      val p = if (i == 0) -dx else if (i == 1) dx else if (i == 2) -dy else dy
+      val q = if (i == 0) x1 - minX else if (i == 1) maxX - x1 else if (i == 2) y1 - minY else maxY - y1
+      if (p == 0.0) {
+        if (q < 0.0) return false
       } else {
-        val r = q(i) / p(i)
-        if (p(i) < 0.0) { if (r > t1) return false; if (r > t0) t0 = r }
+        val r = q / p
+        if (p < 0.0) { if (r > t1) return false; if (r > t0) t0 = r }
         else { if (r < t0) return false; if (r < t1) t1 = r }
       }
       i += 1
@@ -149,24 +150,49 @@ object GeomEval {
     true
   }
 
-  /** Does any ring edge intersect the rectangle? */
-  def ringsIntersectRect(rings: Seq[Seq[(Double, Double)]],
-      minX: Double, minY: Double, maxX: Double, maxY: Double): Boolean = {
-    rings.exists { ring =>
-      if (ring.length < 2) false
-      else {
-        var i = 0
-        var hit = false
-        val n = ring.length
-        while (i < n && !hit) {
-          val (x1, y1) = ring(i)
-          val (x2, y2) = ring((i + 1) % n)
-          hit = segmentIntersectsRect(x1, y1, x2, y2, minX, minY, maxX, maxY)
-          i += 1
-        }
-        hit
+  /** Is `f` true for some edge (point i → point (i+1) mod n) of a ring of
+    * at least 2 points? Null rings and edges with a null end are skipped. */
+  private def existsEdge(rings: ArrayData)(f: (InternalRow, InternalRow) => Boolean): Boolean = {
+    var ri = 0
+    while (ri < rings.numElements()) {
+      val ring = rings.getArray(ri)
+      val n = if (ring == null) 0 else ring.numElements()
+      var i = 0
+      while (n >= 2 && i < n) {
+        val a = ring.getStruct(i, 2)
+        val b = ring.getStruct((i + 1) % n, 2)
+        if (a != null && b != null && f(a, b)) return true
+        i += 1
       }
+      ri += 1
     }
+    false
+  }
+
+  /** The polygon cover at `res`, as (cell, interior) rows: every cell over
+    * the extent of the rings' edges that an edge meets (closed rectangle)
+    * or whose center is inside ([[pipRings]]). `interior` = center inside
+    * and no edge meets the cell, so every point of its rectangle has the
+    * center's even-odd answer. */
+  def polygonCells(rings: ArrayData, res: Int): ArrayData = {
+    // NaN coordinates fail every comparison and stay out of the extent
+    var minLon = Double.PositiveInfinity; var minLat = minLon
+    var maxLon = Double.NegativeInfinity; var maxLat = maxLon
+    def extend(p: InternalRow): Unit = {
+      val lon = p.getDouble(0); val lat = p.getDouble(1)
+      if (lon < minLon) minLon = lon; if (lon > maxLon) maxLon = lon
+      if (lat < minLat) minLat = lat; if (lat > maxLat) maxLat = lat
+    }
+    existsEdge(rings) { (a, b) => extend(a); extend(b); false } // visits every edge
+    val out = Array.newBuilder[Any]
+    CellMath.coverBBox(minLon, minLat, maxLon, maxLat, res).foreach { cell =>
+      val (x0, y0, x1, y1) = CellMath.bounds(cell)
+      if (existsEdge(rings)((a, b) => segmentIntersectsRect(
+          a.getDouble(0), a.getDouble(1), b.getDouble(0), b.getDouble(1), x0, y0, x1, y1)))
+        out += InternalRow(cell, false)
+      else if (pipRings((x0 + x1) / 2, (y0 + y1) / 2, rings)) out += InternalRow(cell, true)
+    }
+    new GenericArrayData(out.result())
   }
 
   /** Scala-side PIP over plain arrays (tests, assembly). */
@@ -210,6 +236,22 @@ case class PointInPolygonExpr(lonExpr: Expression, latExpr: Expression, ringsExp
     copy(f, s, t)
 }
 
+/** The one polygon cover ([[GeomEval.polygonCells]]), used by the PIP join
+  * and tile assignment. */
+case class PolygonCellsExpr(ringsExpr: Expression, resExpr: Expression)
+    extends BinaryExpression {
+  override def left: Expression = ringsExpr
+  override def right: Expression = resExpr
+  override def dataType: DataType = ArrayType(StructType(Seq(StructField("cell", LongType, nullable = false),
+    StructField("interior", BooleanType, nullable = false))), containsNull = false)
+  override def prettyName: String = "polygon_cells"
+  override protected def nullSafeEval(rings: Any, res: Any): Any =
+    GeomEval.polygonCells(rings.asInstanceOf[ArrayData], res.asInstanceOf[Int])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, (rings, res) => s"graft.spatial.cell.GeomEval$$.MODULE$$.polygonCells($rings, $res)")
+  override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression = copy(l, r)
+}
+
 /** Column-level API, mirroring org.apache.spark.sql.functions style. */
 object functions {
   private def e(c: Column): Expression = ColumnBridge.expression(c)
@@ -227,6 +269,8 @@ object functions {
     col(HaversineExpr(dbl(lon1), dbl(lat1), dbl(lon2), dbl(lat2)))
   def point_in_polygon(lon: Column, lat: Column, rings: Column): Column =
     col(PointInPolygonExpr(dbl(lon), dbl(lat), e(rings)))
+  def polygon_cells(rings: Column, res: Int): Column =
+    col(PolygonCellsExpr(e(rings), Literal(res)))
 
   /** Register SQL names so `spark.sql` queries can use them too. */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
@@ -247,5 +291,6 @@ object functions {
     reg.createOrReplaceTempFunction("cell_parent", es => CellParentExpr(l(es(0)), i(es(1))), "built-in")
     reg.createOrReplaceTempFunction("haversine_m", es => HaversineExpr(d(es(0)), d(es(1)), d(es(2)), d(es(3))), "built-in")
     reg.createOrReplaceTempFunction("point_in_polygon", es => PointInPolygonExpr(d(es(0)), d(es(1)), es(2)), "built-in")
+    reg.createOrReplaceTempFunction("polygon_cells", es => PolygonCellsExpr(es(0), i(es(1))), "built-in")
   }
 }

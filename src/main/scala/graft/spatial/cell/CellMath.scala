@@ -94,35 +94,21 @@ object CellMath {
     if (i == out.length) out else java.util.Arrays.copyOf(out, i)
   }
 
-  /** Minimal cover of a lon/lat bbox at resolution res. Handles the
-    * antimeridian by splitting the lon interval. Each index is clamped on
-    * BOTH sides (one-sided clamping left a degenerate bbox exactly on the
-    * lon=180 / lat=-90 edge with an EMPTY cover while cellOf clamps the
-    * matching point inside — the pair silently never joined); an inverted
-    * bbox (min > max on either axis, e.g. bboxOf over empty rings) yields
-    * an empty cover instead of a NegativeArraySizeException. */
+  /** Minimal cover of a lon/lat bbox at resolution res, column by column.
+    * Each index is clamped on BOTH sides (one-sided clamping left a
+    * degenerate bbox exactly on the lon=180 / lat=-90 edge with an EMPTY
+    * cover while cellOf clamps the matching point inside — the pair
+    * silently never joined); an inverted bbox (min > max on either axis,
+    * e.g. the extent of no points) yields an empty cover. */
   def coverBBox(minLon: Double, minLat: Double, maxLon: Double, maxLat: Double, res: Int): Array[Long] = {
     require(res >= 0 && res <= MaxRes, s"resolution must be in [0, $MaxRes], got $res")
     val n = 1 << res
-    @inline def clampX(v: Int): Int = if (v < 0) 0 else if (v >= n) n - 1 else v
-    def xRange(lo: Double, hi: Double): Range = {
-      val x0 = clampX(((lo + 180.0) / 360.0 * n).toInt)
-      val x1 = clampX(((hi + 180.0) / 360.0 * n).toInt)
-      x0 to x1
-    }
-    if (minLat > maxLat) return Array.empty
-    val y0 = clampX(((90.0 - maxLat) / 180.0 * n).toInt)
-    val y1 = clampX(((90.0 - minLat) / 180.0 * n).toInt)
-    val xs: Seq[Int] =
-      if (minLon <= maxLon) xRange(minLon, maxLon)
-      else xRange(minLon, 180.0) ++ xRange(-180.0, maxLon) // antimeridian split
-    val out = new Array[Long](xs.size * (y1 - y0 + 1))
-    var i = 0
-    xs.foreach { x =>
-      var y = y0
-      while (y <= y1) { out(i) = pack(res, x, y); y += 1; i += 1 }
-    }
-    out
+    @inline def clamp(v: Double): Int = { val i = v.toInt; if (i < 0) 0 else if (i >= n) n - 1 else i }
+    if (minLon > maxLon || minLat > maxLat) return Array.empty
+    val (x0, x1) = (clamp((minLon + 180.0) / 360.0 * n), clamp((maxLon + 180.0) / 360.0 * n))
+    val (y0, y1) = (clamp((90.0 - maxLat) / 180.0 * n), clamp((90.0 - minLat) / 180.0 * n))
+    val ny = y1 - y0 + 1
+    Array.tabulate((x1 - x0 + 1) * ny)(i => pack(res, x0 + i / ny, y0 + i % ny))
   }
 
   /** Cell's geographic bounds: (minLon, minLat, maxLon, maxLat). */

@@ -1,14 +1,16 @@
 package graft.spatial.join
 
-import graft.spatial.cell.CellMath
 import graft.spatial.cell.{functions => F}
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Cell-indexed spatial joins (north_star J3/J4): the PIP join is rewritten
-  * manually into a cell equi-join + exact ray-cast test (SURVEY.md §4 —
-  * deliberate API-layer rewrite instead of planner surgery). [[pipJoin]]
+  * manually into a cell equi-join + exact test (SURVEY.md §4 — deliberate
+  * API-layer rewrite instead of planner surgery). The polygon side is the
+  * classified cover `F.polygon_cells`: a candidate in an interior cell (its
+  * center inside, no ring edge meeting it) is a true hit without the
+  * ray-cast, and only boundary-cell candidates are ray-cast. [[pipJoin]]
   * has one path whose physical shape follows from the data: the plain cell
   * join when Catalyst broadcasts a side (north_star "broadcast joins for
   * small polygon sets"), and hot-cell salting only when both sides must
@@ -16,21 +18,11 @@ import org.apache.spark.sql.functions._
   */
 object SpatialJoin {
 
-  private val coverUdf = udf((minLon: Double, minLat: Double, maxLon: Double, maxLat: Double, res: Int) =>
-    CellMath.coverBBox(minLon, minLat, maxLon, maxLat, res))
-
   // stragglers (points whose ring search gave way to a scan of every POI)
   // from the most recent knnJoin in this JVM; -1 = no knnJoin has run. The
   // same number is the "knn_stragglers" accumulator of that call's job.
   private val stragglerCount = new java.util.concurrent.atomic.AtomicLong(-1L)
   def lastKnnStragglerCount: Long = stragglerCount.get()
-
-  /** Polygon side exploded to its bbox cell cover at `res`.
-    * Output: (poly_id, rings, poly side payload..., cell). */
-  def polygonCells(polys: DataFrame, res: Int): DataFrame =
-    polys.withColumn("cell",
-      explode(coverUdf(col("bbox.min_lon"), col("bbox.min_lat"),
-        col("bbox.max_lon"), col("bbox.max_lat"), lit(res))))
 
   /** The polygon side exactly as [[pipJoin]] consumes it, TAGGED with the
     * resolution it was built at: a prepared side from res 10 silently
@@ -44,17 +36,12 @@ object SpatialJoin {
 
   /** The polygon side exactly as [[pipJoin]] consumes it (poly_id/poly_tags
     * renames — polygon payload columns pass through without colliding with
-    * point-side names — cover-exploded, bbox dropped). localCheckpoint the
-    * result and hand it to many pipJoin calls via `preparedCells`. Rows
-    * with a null bbox are dropped: the cover UDF takes primitive doubles,
-    * so a null field would be silently coerced to 0.0 and the polygon
-    * covered at (0, 0) instead of its true location. */
+    * point-side names — bbox dropped), one row per cell of the polygon's
+    * cover with its `cell` and `interior` flag. localCheckpoint the result
+    * and hand it to many pipJoin calls via `preparedCells`. */
   def preparedPolygonCells(polys: DataFrame, res: Int): PreparedCells =
-    PreparedCells(polygonCells(
-      polys.withColumnRenamed("id", "poly_id").withColumnRenamed("tags", "poly_tags")
-        .where(col("bbox.min_lon").isNotNull && col("bbox.min_lat").isNotNull &&
-          col("bbox.max_lon").isNotNull && col("bbox.max_lat").isNotNull), res)
-      .drop("bbox"), res)
+    PreparedCells(polys.withColumnRenamed("id", "poly_id").withColumnRenamed("tags", "poly_tags")
+      .drop("bbox").select(col("*"), inline(F.polygon_cells(col("rings"), res))), res)
 
   /** Point-in-polygon join.
     *
@@ -108,7 +95,6 @@ object SpatialJoin {
         "the cell equi-join would silently match nothing"))
     val polyCells = preparedCells.map(_.df).getOrElse(preparedPolygonCells(polys, res).df)
     val pts = points.withColumn("cell", F.cell_of(col("lon"), col("lat"), res))
-    val exact = F.point_in_polygon(col("lon"), col("lat"), col("rings"))
     val conf = points.sparkSession.sessionState.conf
     val threshold = conf.autoBroadcastJoinThreshold
     def broadcastable(df: DataFrame): Boolean =
@@ -130,7 +116,17 @@ object SpatialJoin {
         .drop("_salt")
       saltedPts.join(replicated, Seq("cell", "salt_id")).drop("salt_id")
     }
-    joined.where(exact).drop("cell", "rings")
+    exactHits(joined).drop("cell")
+  }
+
+  /** The exact step of every cell join: a candidate in an interior cell is
+    * a hit, any other is ray-cast. A point off the grid's range (NaN,
+    * |lon| > 180, |lat| > 90) clamps into a border cell without lying in
+    * its rectangle, so it is always ray-cast. */
+  private def exactHits(joined: DataFrame): DataFrame = {
+    val onGrid = col("lon").between(-180.0, 180.0) && col("lat").between(-90.0, 90.0)
+    joined.where((col("interior") && onGrid) || F.point_in_polygon(col("lon"), col("lat"), col("rings")))
+      .drop("rings", "interior")
   }
 
   /** Only caller: the benchmark's traced run (`perfbench/.../Traced.scala`),
@@ -216,19 +212,14 @@ object SpatialJoin {
       .mode("overwrite").saveAsTable(table)
 
   /** Exchange-free PIP join between two [[writeBucketedByCell]] tables:
-    * points bucketed by probe cell × polygon cell cover bucketed the same
-    * way. Returns the raw candidate join; apply the exact ray-cast with
-    * `F.point_in_polygon` on the result (already included when the tables
-    * carry `rings`). */
+    * points bucketed by probe cell × a [[preparedPolygonCells]] side
+    * bucketed the same way. When the polygon table carries `rings` the
+    * result is [[pipJoin]]'s exact step over the candidates; without it,
+    * the raw candidate join. */
   def bucketedCellJoin(spark: org.apache.spark.sql.SparkSession,
       pointsTable: String, polyCellsTable: String): DataFrame = {
-    val pts = spark.table(pointsTable)
-    val pcs = spark.table(polyCellsTable)
-    val joined = pts.join(pcs, Seq("cell"))
-    if (joined.columns.contains("rings"))
-      joined.where(F.point_in_polygon(col("lon"), col("lat"), col("rings")))
-        .drop("rings")
-    else joined
+    val joined = spark.table(pointsTable).join(spark.table(polyCellsTable), Seq("cell"))
+    if (joined.columns.contains("rings")) exactHits(joined) else joined
   }
 
   /** Range-partition a cell-keyed DataFrame by Z-order of the cell — the

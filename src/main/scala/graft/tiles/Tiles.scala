@@ -1,6 +1,5 @@
 package graft.tiles
 
-import graft.spatial.cell.CellMath
 import graft.spatial.cell.{functions => F}
 
 import org.apache.spark.sql.DataFrame
@@ -10,13 +9,12 @@ import org.apache.spark.sql.functions._
   * assignment over tables of image+caption pairs").
   *
   * A tile IS a cell at zoom z (CellMath packing), so point→tile is the
-  * codegen cell encode and vector→tile reuses the polygon cell cover.
+  * codegen cell encode and vector→tile is the PIP join's polygon cover.
   * Assignment semantics (deterministic, oracle-reproducible):
   *   - a point (image) belongs to exactly one tile: `cell_of(lon, lat, z)`;
-  *   - a polygon is assigned every tile in its bbox cover whose center
-  *     lies inside the polygon OR that contains a polygon vertex OR whose
-  *     bbox is fully inside the polygon bbox — a superset-free practical
-  *     cover for rendering/join workloads.
+  *   - a polygon is assigned every tile over its rings' extent that a ring
+  *     edge meets (the tile's closed rectangle) or whose center lies inside
+  *     the polygon (even-odd, so holes are excluded): `F.polygon_cells`.
   */
 object Tiles {
 
@@ -29,31 +27,9 @@ object Tiles {
       .withColumn("tile_x", shiftright(col("tile"), 29).bitwiseAND(lit(0x1FFFFFFFL)).cast("int"))
       .withColumn("tile_y", col("tile").bitwiseAND(lit(0x1FFFFFFFL)).cast("int"))
 
-  private val tilesOfPolygonUdf = udf(
-    (minLon: Double, minLat: Double, maxLon: Double, maxLat: Double,
-        rings: Seq[Seq[Seq[Double]]], z: Int) => {
-      val ringSeq: Seq[Seq[(Double, Double)]] =
-        rings.map(_.map(r => (r(0), r(1))))
-      CellMath.coverBBox(minLon, minLat, maxLon, maxLat, z).filter { tile =>
-        val (tMinLon, tMinLat, tMaxLon, tMaxLat) = CellMath.bounds(tile)
-        val cLon = (tMinLon + tMaxLon) / 2
-        val cLat = (tMinLat + tMaxLat) / 2
-        // interior tiles: center inside (even-odd, so holes excluded);
-        // boundary tiles: some ring edge crosses the tile rectangle
-        graft.spatial.cell.GeomEval.pip(cLon, cLat, ringSeq) ||
-          graft.spatial.cell.GeomEval.ringsIntersectRect(
-            ringSeq, tMinLon, tMinLat, tMaxLon, tMaxLat)
-      }
-    })
-
-  /** polygons(id, rings, bbox, ...) → (id, tile) pairs at zoom z.
-    * Rings are reshaped struct→array<double> first: Spark scala UDFs cannot
-    * take nested Row arguments. */
+  /** polygons(id, rings, ...) → (id, tile) pairs at zoom z. */
   def assignPolygons(polys: DataFrame, z: Int): DataFrame =
-    polys.select(col("id"), explode(tilesOfPolygonUdf(
-      col("bbox.min_lon"), col("bbox.min_lat"), col("bbox.max_lon"), col("bbox.max_lat"),
-      expr("transform(rings, ring -> transform(ring, p -> array(p.lon, p.lat)))"),
-      lit(z))).as("tile"))
+    polys.select(col("id"), inline(F.polygon_cells(col("rings"), z))).select(col("id"), col("cell").as("tile"))
 
   /** Per-tile aggregation of an assigned point table (A7): image counts +
     * any numeric payload stats, partial-agg friendly. */

@@ -4,7 +4,9 @@ import graft.GenSupport
 import graft.SparkTestBase
 import graft.spatial.cell.{CellMath, GeomEval, functions => F}
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -103,6 +105,96 @@ class CellSpec extends AnyFunSuite with GenSupport with SparkTestBase {
       Seq((4.0, 4.0), (6.0, 4.0), (6.0, 6.0), (4.0, 6.0)))
     assert(GeomEval.pip(2, 2, donut))
     assert(!GeomEval.pip(5, 5, donut)) // in the hole
+  }
+
+  test("segmentIntersectsRect agrees with the array form of Liang–Barsky on every input") {
+    val rnd = new scala.util.Random(20261020L)
+    // coordinates drawn from a small grid make axis-parallel, zero-length
+    // and corner-touching segments common; NaN and ±Inf ride along
+    val grid = Seq(-2.0, -1.0, -0.5, 0.0, 0.5, 1.0, 2.0)
+    val odd = Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity, -0.0)
+    def v(): Double = rnd.nextInt(10) match {
+      case 0 => odd(rnd.nextInt(odd.size))
+      case 1 | 2 | 3 => rnd.nextDouble() * 6 - 3
+      case _ => grid(rnd.nextInt(grid.size))
+    }
+    for (_ <- 0 until 200000) {
+      val (x1, y1, x2, y2) = (v(), v(), v(), v())
+      val (ax, ay, bx, by) = (v(), v(), v(), v())
+      val (minX, maxX, minY, maxY) = (math.min(ax, bx), math.max(ax, bx), math.min(ay, by), math.max(ay, by))
+      assert(GeomEval.segmentIntersectsRect(x1, y1, x2, y2, minX, minY, maxX, maxY) ==
+        CoverReference.segmentMeetsRect(x1, y1, x2, y2, minX, minY, maxX, maxY),
+        s"($x1, $y1)-($x2, $y2) vs [$minX, $maxX]×[$minY, $maxY]")
+    }
+  }
+
+  test("polygon_cells is the classified cover and stays in codegen (property)") {
+    graft.spatial.cell.functions.register(spark)
+    val rnd = new scala.util.Random(15L)
+    def clampLon(x: Double) = math.max(-180.0, math.min(180.0, x))
+    def clampLat(y: Double) = math.max(-90.0, math.min(90.0, y))
+    // star-shaped rings around a random center, 0.3 to 12 cells across;
+    // some snapped to cell lines, some explicitly closed, some with a hole
+    val cases = (0 until 260).map { i =>
+      val res = i % 13
+      val (cw, ch) = (360.0 / (1 << res), 180.0 / (1 << res))
+      val k = 0.3 + rnd.nextDouble() * 12
+      val (rLon, rLat) = (math.min(k * cw, 60.0), math.min(k * ch, 30.0))
+      val (cLon, cLat) = (rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 170 - 85)
+      val snap = rnd.nextInt(3) == 0
+      def ring(scale: Double): Seq[(Double, Double)] = {
+        val angles = Seq.fill(3 + rnd.nextInt(8))(rnd.nextDouble() * 2 * math.Pi).sorted
+        val pts = angles.map { a =>
+          val f = scale * (0.3 + 0.7 * rnd.nextDouble())
+          val (x, y) = (clampLon(cLon + math.cos(a) * rLon * f), clampLat(cLat + math.sin(a) * rLat * f))
+          if (snap) (clampLon(-180 + math.rint((x + 180) / cw) * cw), clampLat(90 - math.rint((90 - y) / ch) * ch))
+          else (x, y)
+        }
+        if (rnd.nextInt(4) == 0) pts :+ pts.head else pts
+      }
+      val rings = if (rnd.nextInt(3) == 0) Seq(ring(1.0), ring(0.25)) else Seq(ring(1.0))
+      (i.toLong, rings, res)
+    }
+    val ringsType = ArrayType(ArrayType(StructType(Seq(
+      StructField("lon", DoubleType), StructField("lat", DoubleType)))))
+    val schema = StructType(Seq(StructField("id", LongType), StructField("rings", ringsType),
+      StructField("res", IntegerType)))
+    // an RDD source keeps the projection from being folded into a local
+    // relation, so the generated code path is the one evaluated
+    val rows = spark.sparkContext.parallelize(cases.map { case (id, rings, res) =>
+      Row(id, rings.map(_.map { case (x, y) => Row(x, y) }), res)
+    }, 4)
+    val df = spark.createDataFrame(rows, schema)
+      .select(col("id"), expr("polygon_cells(rings, res)").as("cells"))
+    val plan = df.queryExecution.executedPlan.toString
+    assert(plan.linesIterator.exists(l => l.contains("*(") && l.contains("Project") &&
+      l.contains("polygon_cells")), plan)
+    val got = df.collect().map(r => r.getLong(0) ->
+      r.getSeq[Row](1).map(c => (c.getLong(0), c.getBoolean(1)))).toMap
+    var interiorCells = 0
+    for ((id, rings, res) <- cases) {
+      val cells = got(id)
+      assert(cells === CoverReference.cover(rings, res), s"polygon $id at res $res: $rings")
+      interiorCells += cells.count(_._2)
+      val byCell = cells.toMap
+      // points: vertices, points along every edge, random points over the extent
+      val edgePts = rings.flatMap(r => r.indices.flatMap { j =>
+        val ((x1, y1), (x2, y2)) = (r(j), r((j + 1) % r.size))
+        Seq(0.25, 0.5, 0.75).map(t => (x1 + t * (x2 - x1), y1 + t * (y2 - y1)))
+      })
+      val all = rings.flatten
+      val (minX, maxX) = (all.map(_._1).min, all.map(_._1).max)
+      val (minY, maxY) = (all.map(_._2).min, all.map(_._2).max)
+      val randomPts = Seq.fill(60)((minX + rnd.nextDouble() * (maxX - minX), minY + rnd.nextDouble() * (maxY - minY)))
+      for ((x, y) <- all ++ edgePts ++ randomPts) {
+        val inside = GeomEval.pip(x, y, rings)
+        val cell = CellMath.cellOf(x, y, res)
+        if (inside) assert(byCell.contains(cell), s"polygon $id res $res: inside point ($x, $y) has no cell")
+        if (byCell.getOrElse(cell, false))
+          assert(inside, s"polygon $id res $res: ($x, $y) is in an interior cell but outside")
+      }
+    }
+    assert(interiorCells > 0, "the random polygons must produce interior cells")
   }
 
   test("haversine sanity: 1 degree lat ≈ 111.19 km, symmetric") {
@@ -220,5 +312,19 @@ class CellSpec extends AnyFunSuite with GenSupport with SparkTestBase {
         |  CAST(NULL AS ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>))) AS p""".stripMargin)
       .collect().head.getBoolean(0)
     assert(inside, "null hole ring must be ignored, square still contains the point")
+    // the cover skips a null ring like the ray-cast, and drops the two edges
+    // of a null point
+    val square = "named_struct('lon', 0D, 'lat', 0D), named_struct('lon', 90D, 'lat', 0D), " +
+      "named_struct('lon', 90D, 'lat', 60D), named_struct('lon', 0D, 'lat', 60D)"
+    def cover(rings: String): Seq[(Long, Boolean)] =
+      spark.sql(s"SELECT polygon_cells($rings, 4) AS c").collect().head.getSeq[Row](0)
+        .map(c => (c.getLong(0), c.getBoolean(1)))
+    val plain = cover(s"array(array($square))")
+    assert(plain.nonEmpty && plain.exists(_._2))
+    assert(cover(s"array(array($square), CAST(NULL AS ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>))") === plain)
+    val holed = cover(s"array(array($square, CAST(NULL AS STRUCT<lon: DOUBLE, lat: DOUBLE>)))")
+    assert(holed.nonEmpty && holed.map(_._1).toSet.subsetOf(plain.map(_._1).toSet))
+    assert(spark.sql("SELECT polygon_cells(CAST(NULL AS ARRAY<ARRAY<STRUCT<lon: DOUBLE, lat: DOUBLE>>>), 4)")
+      .collect().head.isNullAt(0))
   }
 }

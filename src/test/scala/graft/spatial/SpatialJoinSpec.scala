@@ -345,6 +345,68 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     }
   }
 
+  // hand-built polygons whose cover has interior cells at coarse
+  // resolutions: a square with a hole, a concave "C", rectangles with an
+  // edge on lon = 180 and on lon = -180 / lat = -90, and two that reach past
+  // ±180, so a point off the grid's range clamps into an interior cell
+  private val handPolys: Seq[(Long, Seq[Seq[(Double, Double)]])] = Seq(
+    1L -> Seq(Seq((-45.0, -22.5), (45.0, -22.5), (45.0, 22.5), (-45.0, 22.5), (-45.0, -22.5)),
+      Seq((-11.25, -5.625), (11.25, -5.625), (11.25, 5.625), (-11.25, 5.625))),
+    2L -> Seq(Seq((57.0, 11.0), (124.0, 11.0), (124.0, 23.3), (80.1, 23.3), (80.1, 44.2),
+      (124.0, 44.2), (124.0, 56.0), (57.0, 56.0))),
+    3L -> Seq(Seq((146.25, -20.0), (180.0, -20.0), (180.0, 25.0), (146.25, 25.0))),
+    4L -> Seq(Seq((-180.0, -90.0), (-135.0, -90.0), (-135.0, -56.25), (-180.0, -56.25))),
+    5L -> Seq(Seq((135.0, -50.0), (185.0, -50.0), (185.0, -30.0), (135.0, -30.0))),
+    6L -> Seq(Seq((-190.0, 30.0), (-150.0, 30.0), (-150.0, 50.0), (-190.0, 50.0))))
+
+  test("J3 PIP join equals brute force on hand-built polygons with interior cells") {
+    import spark.implicits._
+    val polyDf = handPolys.toDF("id", "rings")
+      .withColumn("rings", col("rings").cast("array<array<struct<lon:double,lat:double>>>"))
+      .withColumn("src", lit("hand"))
+    val vertices = handPolys.flatMap(_._2).flatten
+    val alongEdges = handPolys.flatMap(_._2).flatMap(r => r.indices.flatMap { i =>
+      val ((x1, y1), (x2, y2)) = (r(i), r((i + 1) % r.size))
+      Seq(0.25, 0.5, 0.75).map(t => (x1 + t * (x2 - x1), y1 + t * (y2 - y1)))
+    })
+    // res-5 cell corners and mid-boundary points (also res-9 corners), and
+    // res-9 corners around every vertex
+    val res5Lines = for (i <- 0 to 32; j <- 0 to 64) yield (-180 + 11.25 * i, 90 - 2.8125 * j)
+    val res9Corners = vertices.flatMap { case (x, y) =>
+      val (cx, cy) = (math.rint((x + 180) / 0.703125), math.rint((90 - y) / 0.3515625))
+      for (di <- -2 to 2; dj <- -2 to 2) yield (-180 + (cx + di) * 0.703125, 90 - (cy + dj) * 0.3515625)
+    }
+    val rnd = new scala.util.Random(905L)
+    val random = Seq.fill(400)((rnd.nextDouble() * 360 - 180, rnd.nextDouble() * 180 - 90))
+    val special = Seq((0.0, 0.0), (5.0, 2.0), (-11.25, 0.0), (11.25, 0.0), (0.0, 5.625), // the hole
+      (100.0, 30.0), (110.0, 40.0), // the C's notch
+      (180.0, -90.0), (-180.0, -90.0), (180.0, 90.0), (-180.0, 90.0)) ++
+      (-20 to 25 by 5).map(y => (180.0, y.toDouble)) ++ (-180 to -135 by 5).map(x => (x.toDouble, -90.0)) ++
+      Seq((190.0, -36.0), (182.0, -36.0), (185.0, -40.0), (Double.NaN, 42.0), (-200.0, 42.0),
+        (-185.0, 42.0), (0.0, Double.NaN), (10.0, 95.0), (10.0, -95.0), (Double.PositiveInfinity, -36.0))
+    val ptsLocal = (vertices ++ alongEdges ++ res5Lines ++ res9Corners ++ random ++ special)
+      .zipWithIndex.map { case ((x, y), i) => (i.toLong, x, y) }
+    val pts = ptsLocal.toDF("pt_id", "lon", "lat")
+    val expected = ptsLocal.flatMap { case (id, lon, lat) =>
+      handPolys.collect { case (pid, rings) if GeomEval.pip(lon, lat, rings) => (id, pid) }
+    }.toSet
+    for (res <- Seq(5, 9)) {
+      // the interior skip is exercised: some true hits lie in interior cells
+      val interior = SpatialJoin.preparedPolygonCells(polyDf, res).df.where(col("interior"))
+        .select("poly_id", "cell").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      val skipped = expected.count { case (id, pid) =>
+        val (_, lon, lat) = ptsLocal(id.toInt)
+        interior.contains((pid, CellMath.cellOf(lon, lat, res)))
+      }
+      assert(skipped > 0, s"res $res: no true hit lies in an interior cell")
+      for (threshold <- Seq("10MB", "-1")) withBroadcastThreshold(threshold) {
+        val got = SpatialJoin.pipJoin(pts, polyDf, res = res).select("pt_id", "poly_id").collect()
+          .map(r => (r.getLong(0), r.getLong(1))).toSet
+        assert(got == expected, s"res $res threshold $threshold: missing ${expected -- got}, extra ${got -- expected}")
+      }
+    }
+  }
+
   test("J3 hot-cell salt rule") {
     import SpatialJoin.hotCellSalt
     // a cell at exactly N/P is not hot; one point above it is
@@ -488,9 +550,7 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     import graft.spatial.cell.{functions => F}
     val res = 12
     val pts = mkPoints(300).withColumn("cell", F.cell_of(col("lon"), col("lat"), res))
-    val pcs = SpatialJoin.polygonCells(
-      polys.withColumnRenamed("id", "poly_id").withColumnRenamed("tags", "poly_tags"), res)
-      .drop("bbox")
+    val pcs = SpatialJoin.preparedPolygonCells(polys, res).df
     SpatialJoin.writeBucketedByCell(pts, "bspec_points", buckets = 8)
     SpatialJoin.writeBucketedByCell(pcs, "bspec_polycells", buckets = 8)
     // tiny fixture tables would be auto-broadcast (that plan is also
@@ -523,12 +583,29 @@ class SpatialJoinSpec extends AnyFunSuite with SparkTestBase {
     val assigned = Tiles.assignPoints(pts, z)
     val polyTiles = Tiles.assignPolygons(polys.where(col("src") === "relation"), z)
     // for every point inside a relation polygon, the point's tile must be
-    // among the polygon's assigned tiles (tile-center OR vertex OR interior)
+    // among the polygon's assigned tiles (an edge meets it or its center is inside)
     val hits = SpatialJoin.pipJoin(assigned, polys.where(col("src") === "relation"), res = 12)
       .select("pt_id", "poly_id", "tile")
     val joined = hits.join(polyTiles.withColumnRenamed("id", "poly_id"),
       Seq("poly_id", "tile"), "left_semi")
     assert(joined.count() === hits.count())
+  }
+
+  test("tile assignment gives the old tile rule's rows at z 6, 8 and 10") {
+    // the rule before the one cover: cells of the bbox's cover whose center
+    // is inside or that a ring edge meets
+    val local = polys.select("id", "rings", "bbox").collect().map { r =>
+      val rings = r.getSeq[scala.collection.Seq[org.apache.spark.sql.Row]](1)
+        .map(_.map(p => (p.getDouble(0), p.getDouble(1))).toSeq).toSeq
+      val b = r.getStruct(2)
+      (r.getLong(0), rings, (b.getDouble(0), b.getDouble(1), b.getDouble(2), b.getDouble(3)))
+    }
+    for (z <- Seq(6, 8, 10)) {
+      val got = Tiles.assignPolygons(polys, z).collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+      val want = local.toSeq.flatMap { case (id, rings, bbox) =>
+        CoverReference.oldTiles(bbox, rings, z).map(id -> _) }.sorted
+      assert(want.nonEmpty && got === want, s"z $z")
+    }
   }
 
   test("per-tile aggregation (A7) counts match total") {
