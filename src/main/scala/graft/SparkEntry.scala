@@ -227,9 +227,7 @@ object SparkEntry {
       val edges = fp.withColumn("nxt", lead("doc_id", 1).over(w))
         .where(col("nxt").isNotNull)
         .select(col("doc_id").as("a_id"), col("nxt").as("b_id"))
-      // loop parallelism sized to the node count (thousands), not the
-      // session's data-sized shuffle default
-      graft.text.Components.connectedComponents(edges, loopShufflePartitions = Some(8))
+      graft.text.Components.connectedComponents(edges)
         .select(col("id").as("doc_id"), col("component"))
     }),
     "d5_minhash_lsh" -> ((s, dir) => {

@@ -86,6 +86,16 @@ object Ann {
   private def bucketUdf(nPlanes: Int, seed: Long) =
     udf((vec: Seq[Float], table: Int) => lshBucket(vec, nPlanes, seed + table * 7919L))
 
+  /** One row of `df` per hash table (`table`, `bucket`). A null vector has
+    * no bucket, so its rows are dropped (as `minhashLsh` drops null text):
+    * a null-vector query falls to [[lshTopK]]'s under-fill fallback, and a
+    * null vector never reaches a cosine threshold. */
+  private def withBuckets(df: DataFrame, vecCol: String, nPlanes: Int, nTables: Int,
+      seed: Long): DataFrame =
+    df.where(col(vecCol).isNotNull)
+      .withColumn("table", explode(array((0 until nTables).map(lit(_)): _*)))
+      .withColumn("bucket", bucketUdf(nPlanes, seed)(col(vecCol), col("table")))
+
   /** Deterministically cap each (keyCols) bucket of `df` to ~`cap` rows by
     * keeping the id-hash residue-0 stratum — the top-k analog of
     * [[graft.text.Dedup.subBucketed]]: where near-dup SPLITS an oversize
@@ -95,21 +105,12 @@ object Ann {
     * fallback, so output quality degrades to the fallback's, never to
     * silence). Only the rare oversize buckets broadcast back; the big side
     * is never shuffled for the guard, and the oversize set is measured via
-    * the named observe() (Dedup.guardMetrics). */
+    * the named observe() (Dedup.guardMetrics): the residue-0 stratum is
+    * the `_sub = 0` split of the shared guard. */
   private[graft] def capBuckets(df: DataFrame, keyCols: Seq[String], idCol: String,
-      cap: Int, guardName: String): DataFrame = {
-    // fail fast at plan time: cap = 0 would reach the ANSI-throwing `/ cap`
-    // mid-job with an opaque DIVIDE_BY_ZERO instead of this message
-    require(cap > 0, s"bucket cap must be positive, got $cap")
-    val oversize = df.groupBy(keyCols.map(col): _*)
-      .agg(count(lit(1)).as("_bsz")).where(col("_bsz") > cap)
-      .observe(guardName, graft.text.Dedup.guardMetrics.head,
-        graft.text.Dedup.guardMetrics.tail: _*)
-    df.join(broadcast(oversize), keyCols, "left")
-      .where(col("_bsz").isNull ||
-        pmod(xxhash64(col(idCol)), ceil(col("_bsz") / cap).cast("long")) === 0)
-      .drop("_bsz")
-  }
+      cap: Int, guardName: String): DataFrame =
+    graft.text.Dedup.subBucketed(df, keyCols, idCol, cap, guardName)._1
+      .where(col("_sub") === 0L).drop("_sub")
 
   /** Approximate top-k: LSH bucket candidates + exact rerank + wide-probe
     * IVF fallback for under-filled queries. With `nTables` independent hash
@@ -122,11 +123,6 @@ object Ann {
       nPlanes: Int = 12, nTables: Int = 4, seed: Long = 42L,
       fallbackCells: Int = 16, smallCorpusBytes: Long = 64L << 20,
       maxBucketSize: Int = 100000): DataFrame = {
-    val tables = (0 until nTables).map(lit(_))
-    def withBuckets(df: DataFrame, vecCol: String): DataFrame =
-      df.withColumn("table", explode(array(tables: _*)))
-        .withColumn("bucket", bucketUdf(nPlanes, seed)(col(vecCol), col("table")))
-
     val spark = queries.sparkSession
     // the candidates localCheckpoint below pins executor blocks; free
     // exactly the blocks this call's own checkpoints created once the
@@ -135,8 +131,8 @@ object Ann {
     // checkpoint blocks; CheckpointTracker scaladoc for the concurrency
     // contract)
     val ckpt = new graft.util.CheckpointTracker(spark)
-    val qb = withBuckets(queries, "q_vec")
-    val cb = capBuckets(withBuckets(corpus, "c_vec"),
+    val qb = withBuckets(queries, "q_vec", nPlanes, nTables, seed)
+    val cb = capBuckets(withBuckets(corpus, "c_vec", nPlanes, nTables, seed),
       Seq("table", "bucket"), "c_id", maxBucketSize, "lsh_topk_bucket_guard")
     val w = Window.partitionBy(col("q_id")).orderBy(col("cos_sim").desc, col("c_id"))
     // localCheckpoint AFTER the rank filter: the materialized set is ≤ k
@@ -338,7 +334,6 @@ object Ann {
   def nearDuplicatePairs(corpus: DataFrame, threshold: Double = 0.95,
       nPlanes: Int = 12, nTables: Int = 4, seed: Long = 42L,
       maxBucketSize: Int = 100000, expandExactGroups: Boolean = true): DataFrame = {
-    val tables = (0 until nTables).map(lit(_))
     val base = corpus.select(col("c_id").as("_id"), col("c_vec").as("_vec"))
     // identical-vector collapse via the shared partial-aggregating groupBy
     // (Dedup.collapseByKey — round-3 verdict item 4: never a window keyed
@@ -346,52 +341,20 @@ object Ann {
     // byte-identical to the representative's
     val (reps, membership) = graft.text.Dedup.collapseByKey(
       base, "_vec", "_id", expandExactGroups, keepKeyInMembers = true)
-    val banded = reps.withColumn("table", explode(array(tables: _*)))
-      .withColumn("bucket", bucketUdf(nPlanes, seed)(col("_vec"), col("table")))
-    // count guard via partial-aggregated groupBy + broadcast of only the
-    // (rare) oversize buckets — never a window re-shuffle of the banded
-    // side. The rarity assumption is measured, not silent: the named
-    // observe() records oversize_buckets/oversize_rows/max_bucket_rows at
-    // zero extra cost (see Dedup.guardMetrics).
-    val oversize = banded.groupBy("table", "bucket")
-      .agg(count(lit(1)).as("_bsz")).where(col("_bsz") > maxBucketSize)
-      .observe("ann_bucket_guard", graft.text.Dedup.guardMetrics.head,
-        graft.text.Dedup.guardMetrics.tail: _*)
-    val guarded = banded.join(broadcast(oversize), Seq("table", "bucket"), "left")
-      .withColumn("_sub",
-        when(col("_bsz").isNotNull,
-          pmod(xxhash64(col("_id")), ceil(col("_bsz") / maxBucketSize).cast("long")))
-          .otherwise(lit(0L)))
-      .drop("_bsz")
-    val repPairs = guarded.as("a").join(guarded.as("b"),
-        col("a.table") === col("b.table") && col("a.bucket") === col("b.bucket") &&
-          col("a._sub") === col("b._sub") && col("a._id") < col("b._id"))
-      .select(col("a._id").as("a_id"), col("b._id").as("b_id"),
-        col("a._vec").as("va"), col("b._vec").as("vb"))
-      .dropDuplicates("a_id", "b_id")
-      .withColumn("cos_sim", cosine(col("va"), col("vb")))
+    val repPairs = graft.text.Dedup.bandSelfJoin(
+        withBuckets(reps, "_vec", nPlanes, nTables, seed), Seq("table", "bucket"), "_vec",
+        maxBucketSize, "ann_bucket_guard")
+      .withColumn("cos_sim", cosine(col("key_a"), col("key_b")))
       .where(col("cos_sim") >= threshold)
       .select("a_id", "b_id", "cos_sim")
-    if (!expandExactGroups) repPairs
-    else {
-      // intra-cluster pairs: members are byte-identical to their
-      // representative, so cosine over the group's vector is bit-identical
-      // to the un-collapsed plan's per-member computation; the pair join
-      // keys on the long canonical id, never the vector array
-      val members = membership.get
-      val intra = members.as("x").join(
-          members.select(col("_rep").as("_yrep"), col("_id").as("_yid")).as("y"),
-          col("x._rep") === col("_yrep") && col("x._id") < col("_yid"))
-        .withColumn("cos_sim", cosine(col("x._vec"), col("x._vec")))
+    membership match {
+      case None => repPairs
+      // members are byte-identical to their representative, so the intra
+      // cosine over the member's own vector equals the un-collapsed plan's
+      // (NULL for a zero vector, which the threshold then drops)
+      case Some(m) => graft.text.Dedup.expandGroups(repPairs, m,
+          cosine(col("x._vec"), col("x._vec")).as("cos_sim"), Seq("cos_sim"))
         .where(col("cos_sim") >= threshold)
-        .select(col("x._id").as("a_id"), col("_yid").as("b_id"), col("cos_sim"))
-      val mem = members.select(col("_rep"), col("_id"))
-      val cross = repPairs
-        .join(mem.withColumnRenamed("_rep", "a_id").withColumnRenamed("_id", "_ma"), "a_id")
-        .join(mem.withColumnRenamed("_rep", "b_id").withColumnRenamed("_id", "_mb"), "b_id")
-        .select(least(col("_ma"), col("_mb")).as("a_id"),
-          greatest(col("_ma"), col("_mb")).as("b_id"), col("cos_sim"))
-      intra.unionByName(cross)
     }
   }
 }

@@ -2,7 +2,6 @@ package graft.text
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.SessionBridge
 
 /** Connected components over a pair/edge list — the step that turns the
   * dedup operators' PAIRS (minhash/simhash/embedding near-dup, exact-dup
@@ -12,7 +11,7 @@ import org.apache.spark.sql.graftbridge.SessionBridge
   * Algorithm: min-label propagation with POINTER JUMPING — each iteration
   * takes (1) the minimum label over the node's neighbors and (2) the label
   * OF its current label (path shortcutting), so chains of length n converge
-  * in O(log n) iterations, not O(n). Each iteration is two hash-join
+  * in O(log n) iterations, not O(n). Each iteration is two join
   * shuffles over (edges ⋈ labels) + (labels ⋈ labels) with a
   * `localCheckpoint` to truncate lineage; convergence is detected by
   * counting CHANGED labels in the same per-round aggregation (zero changes
@@ -22,6 +21,14 @@ import org.apache.spark.sql.graftbridge.SessionBridge
 object Components {
 
   /** Components of the undirected graph given by `edges`.
+    *
+    * The loop runs on the caller's session and never touches its conf.
+    * AQE stays as the caller set it: with it on (Spark's default) each
+    * round's shuffles are re-planned from the sizes they actually wrote, so
+    * the partitions coalesce to the label frame (one row per node, usually
+    * far below the corpus the session's shuffle default is sized for) and
+    * a small side can turn into a broadcast at runtime; no per-call
+    * partition knob is needed.
     * @return (id, component) for every node INCIDENT TO AN EDGE; component
     *         is the minimum node id in the connected component. Isolated
     *         nodes (no edges) are not rows — callers left-join and coalesce
@@ -31,35 +38,8 @@ object Components {
     *         fixpoint (at the default 25, pointer jumping covers diameters
     *         beyond 2^25 — hitting this means the input is pathological,
     *         and an unconverged labeling must not be returned silently) */
-  /** @param loopShufflePartitions shuffle partitioning for the loop's joins
-    *        (None = session setting). The label frame is one row per node —
-    *        usually far smaller than the session's data-sized default, and
-    *        with AQE off nothing coalesces it, so per-round task overhead
-    *        scales with this knob. Size it to the node count / executor
-    *        fleet, not to the corpus. */
   def connectedComponents(edges: DataFrame, aCol: String = "a_id", bCol: String = "b_id",
-      maxIter: Int = 25, loopShufflePartitions: Option[Int] = None): DataFrame = {
-    val spark = edges.sparkSession
-    // AQE re-plans every round of this driver-side iterative loop and has
-    // been observed (Spark 4.1.2 local) to stall in withFinalPlanUpdate on
-    // checkpointed iterations. The per-round joins are small and
-    // fixed-shape — plan them statically. The flips live on a CLONED session (same context + cache, isolated conf),
-    // so a concurrent query on the caller's session never sees them; the
-    // result is re-rooted onto the caller's session before returning.
-    val loop = SessionBridge.cloneSession(spark)
-    loop.conf.set("spark.sql.adaptive.enabled", "false")
-    // round-6 (guide §3.1): the loop's per-round joins are small equi-joins
-    // over checkpointed frames (statistics unknown → never broadcast);
-    // sort-merge pays two sorts per join per round for nothing a hash table
-    // doesn't give — prefer shuffled hash join for the whole loop session
-    loop.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    loopShufflePartitions.foreach(p => loop.conf.set("spark.sql.shuffle.partitions", p.toString))
-    val out = connectedComponentsLoop(SessionBridge.ofRows(loop, edges), aCol, bCol, maxIter)
-    SessionBridge.ofRows(spark, out)
-  }
-
-  private def connectedComponentsLoop(edges: DataFrame, aCol: String, bCol: String,
-      maxIter: Int): DataFrame = {
+      maxIter: Int = 25): DataFrame = {
     val spark = edges.sparkSession
     // per-iteration localCheckpoints pin executor blocks — free exactly the
     // blocks THIS call's checkpoints created, except the returned result's

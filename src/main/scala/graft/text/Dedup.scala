@@ -127,7 +127,11 @@ object Dedup {
     * `df.queryExecution.observedMetrics(guardName)` after an action. Caveat:
     * when the oversize set is EMPTY, AQE's empty-relation propagation can
     * eliminate the broadcast subtree and the metric node with it — an
-    * absent metric therefore means zero, never "unmeasured". */
+    * absent metric therefore means zero, never "unmeasured".
+    *
+    * This is the one oversize-bucket guard: [[graft.ann.Ann.capBuckets]]
+    * keeps only the `_sub = 0` stratum of it (top-k SAMPLES a bucket where
+    * near-dup SPLITS it). */
   private[graft] def subBucketed(banded: DataFrame, bandCols: Seq[String], idCol: String,
       cap: Int, guardName: String): (DataFrame, Seq[String]) = {
     // fail fast at plan time: cap = 0 would reach the ANSI-throwing `/ cap`
@@ -249,16 +253,10 @@ object Dedup {
     val banded = reps.select(col("_id"), col("sig"),
       posexplode(expr(s"transform(sequence(0, ${bands - 1}), " +
         s"b -> hash(slice(sig, b * $rows + 1, $rows)))")).as(Seq("band", "bucket")))
-    val (guarded, joinKeys) =
-      subBucketed(banded, Seq("band", "bucket"), "_id", maxBucketSize, "minhash_bucket_guard")
-    val joinCond = joinKeys.map(k => col(s"a.$k") === col(s"b.$k"))
-      .reduce(_ && _) && col("a._id") < col("b._id")
-    val repPairs = guarded.as("a").join(guarded.as("b"), joinCond)
-      .select(col("a._id").as("a_id"), col("b._id").as("b_id"),
-        col("a.sig").as("sig_a"), col("b.sig").as("sig_b"))
-      .dropDuplicates("a_id", "b_id")
+    val repPairs = bandSelfJoin(banded, Seq("band", "bucket"), "sig", maxBucketSize,
+        "minhash_bucket_guard")
       .withColumn("est_jaccard",
-        expr("size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), v -> v)) / size(sig_a)"))
+        expr("size(filter(zip_with(key_a, key_b, (x, y) -> x = y), v -> v)) / size(key_a)"))
       .where(col("est_jaccard") >= threshold)
       .select("a_id", "b_id", "est_jaccard")
     membership match {
@@ -267,13 +265,31 @@ object Dedup {
     }
   }
 
+  /** Candidate pairs of the banded-LSH skeleton shared by [[minhashLsh]],
+    * [[simhashPairs]] and [[graft.ann.Ann.nearDuplicatePairs]]: rows of
+    * `banded` (`_id`, `keyCol`, `bandCols`) that share a band bucket pair up
+    * once each, after the [[subBucketed]] guard splits oversize buckets.
+    * The caller scores and filters the pairs.
+    * @return (a_id, b_id, key_a, key_b) with a_id < b_id, one row per pair */
+  private[graft] def bandSelfJoin(banded: DataFrame, bandCols: Seq[String], keyCol: String,
+      cap: Int, guardName: String): DataFrame = {
+    val (guarded, joinKeys) = subBucketed(banded, bandCols, "_id", cap, guardName)
+    val joinCond = joinKeys.map(k => col(s"a.$k") === col(s"b.$k"))
+      .reduce(_ && _) && col("a._id") < col("b._id")
+    guarded.as("a").join(guarded.as("b"), joinCond)
+      .select(col("a._id").as("a_id"), col("b._id").as("b_id"),
+        col(s"a.$keyCol").as("key_a"), col(s"b.$keyCol").as("key_b"))
+      .dropDuplicates("a_id", "b_id")
+  }
+
   /** Expand canonical-representative pairs back to member pairs: intra-group
-    * pairs (exact duplicates of one another) carry `intraPayload`; cross-
-    * group pairs inherit the representative pair's payload columns. Output
-    * is identical to running the LSH join over raw documents — exact
-    * duplicates share every band with their representative.
-    * `membership` = (_id, _rep); groups join on the (long) canonical id. */
-  private def expandGroups(repPairs: DataFrame, membership: DataFrame,
+    * pairs (exact duplicates of one another) carry `intraPayload`, which may
+    * read the `x.`-qualified member row; cross-group pairs inherit the
+    * representative pair's payload columns. Output is identical to running
+    * the LSH join over raw documents — exact duplicates share every band
+    * with their representative.
+    * `membership` = (_id, _rep, ...); groups join on the (long) canonical id. */
+  private[graft] def expandGroups(repPairs: DataFrame, membership: DataFrame,
       intraPayload: Column, payloadCols: Seq[String]): DataFrame = {
     val intra = membership.as("x").join(membership.as("y"),
         col("x._rep") === col("y._rep") && col("x._id") < col("y._id"))
@@ -332,15 +348,9 @@ object Dedup {
     val banded = reps.select(col("_id"), col("simhash"),
       posexplode(expr("transform(sequence(0, 3), " +
         "b -> (simhash >> (b * 16)) & 65535)")).as(Seq("band", "bucket")))
-    val (guarded, joinKeys) =
-      subBucketed(banded, Seq("band", "bucket"), "_id", maxBucketSize, "simhash_bucket_guard")
-    val joinCond = joinKeys.map(k => col(s"a.$k") === col(s"b.$k"))
-      .reduce(_ && _) && col("a._id") < col("b._id")
-    val repPairs = guarded.as("a").join(guarded.as("b"), joinCond)
-      .select(col("a._id").as("a_id"), col("b._id").as("b_id"),
-        col("a.simhash").as("sh_a"), col("b.simhash").as("sh_b"))
-      .dropDuplicates("a_id", "b_id")
-      .withColumn("hamming", bit_count(col("sh_a").bitwiseXOR(col("sh_b"))))
+    val repPairs = bandSelfJoin(banded, Seq("band", "bucket"), "simhash", maxBucketSize,
+        "simhash_bucket_guard")
+      .withColumn("hamming", bit_count(col("key_a").bitwiseXOR(col("key_b"))))
       .where(col("hamming") <= maxHamming)
       .select("a_id", "b_id", "hamming")
     membership match {

@@ -192,6 +192,55 @@ class AnnSpec extends AnyFunSuite with SparkTestBase {
     assert(pairs.contains((0L, 100000L)))
   }
 
+  test("near-duplicate pairs equal all-pairs cosine >= threshold through the group expansion") {
+    import spark.implicits._
+    // a 3-copy byte-identical cluster (three intra pairs), a near neighbour
+    // of it (cross pairs through the expansion), two zero vectors (cosine
+    // NULL: they never pair, not even with each other) and spread vectors
+    val dims = 16
+    def vec(seed: Int, eps: Double): Seq[Float] = {
+      val r = new scala.util.Random(seed)
+      (0 until dims).map(d => (math.cos(d + 1) + r.nextGaussian() * eps).toFloat)
+    }
+    val dup = vec(1, 0.0)
+    val rows = Seq((10L, dup), (11L, dup), (12L, dup), (13L, vec(2, 1e-3)),
+      (20L, Seq.fill(dims)(0f)), (21L, Seq.fill(dims)(0f))) ++
+      (100 until 140).map(i => (i.toLong, vec(i * 7919, 1.0)))
+    val threshold = 0.99
+    def cos(a: Seq[Float], b: Seq[Float]): Double = {
+      val dot = a.zip(b).map { case (x, y) => x.toDouble * y }.sum
+      dot / (math.sqrt(a.map(x => x.toDouble * x).sum) * math.sqrt(b.map(x => x.toDouble * x).sum))
+    }
+    val expected = (for {
+      (i, a) <- rows; (j, b) <- rows if i < j
+      c = cos(a, b) if !c.isNaN && c >= threshold
+    } yield (i, j) -> c).toMap
+    assert(expected.keySet === Set((10L, 11L), (10L, 12L), (11L, 12L),
+      (10L, 13L), (11L, 13L), (12L, 13L)))
+    val got = Ann.nearDuplicatePairs(rows.toDF("c_id", "c_vec"), threshold = threshold)
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getDouble(2))
+    assert(got.map(_._1).toSet === expected.keySet)
+    assert(got.length === expected.size, "each pair once")
+    got.foreach { case (p, c) => assert(math.abs(c - expected(p)) < 1e-6, s"pair $p") }
+  }
+
+  test("a null vector drops out of LSH bucketing instead of failing the job") {
+    import spark.implicits._
+    val nullC = Seq((999999L, Option.empty[Seq[Float]])).toDF("c_id", "c_vec")
+    val nullQ = Seq((999998L, Option.empty[Seq[Float]])).toDF("q_id", "q_vec")
+    val k = 3
+    val out = Ann.lshTopK(queries.unionByName(nullQ), corpus.unionByName(nullC), k).collect()
+    val byQ = out.groupBy(_.getLong(0))
+    (0L until 8L).foreach(q => assert(byQ(q).length === k, s"query $q"))
+    val v0 = corpus.where(col("c_id") === 0).collect().head.getSeq[Float](1)
+    val planted = corpus.unionByName(Seq((100000L, v0)).toDF("c_id", "c_vec"))
+    def pairs(df: org.apache.spark.sql.DataFrame) = Ann.nearDuplicatePairs(df, threshold = 0.999)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val withNull = pairs(planted.unionByName(nullC))
+    assert(withNull.contains((0L, 100000L)))
+    assert(withNull === pairs(planted))
+  }
+
   test("capBuckets bounds a hot bucket deterministically and reports it") {
     import spark.implicits._
     // one 40-row bucket with cap 10 → ceil(40/10)=4 strata, residue-0 kept

@@ -51,6 +51,8 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
     // degenerate knobs fail fast, not garbage output
     intercept[IllegalArgumentException](Dedup.minhashLsh(docs, bands = 0))
+    intercept[IllegalArgumentException](graft.ann.Ann.nearDuplicatePairs(
+      Seq((1L, Seq(1f, 0f))).toDF("c_id", "c_vec"), maxBucketSize = 0))
   }
 
   test("minhash signature: identical texts identical sigs; near dups mostly agree") {
