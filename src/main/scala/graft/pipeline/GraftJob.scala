@@ -4,6 +4,8 @@ import graft.spatial.join.SpatialJoin
 import graft.tiles.Tiles
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.KnownNotNull
+import org.apache.spark.sql.graftbridge.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -16,7 +18,9 @@ import org.apache.spark.sql.types._
   *   2. images × polygons PIP join (cell equi-join at `res`, ray-cast
   *      outside interior cells; [[SpatialJoin.pipJoin]] picks broadcast or hot-cell
   *      salting from the data);
-  *   3. per-tile aggregation of join hits (partial agg map-side).
+  *   3. per-tile rollup of images and hits: one aggregate keyed on `tile`
+  *      over both, partial agg map-side, one exchange and no join
+  *      ([[tileRollup]]).
   *
   * Output: one row per tile that received at least one image, with
   * [[RollupSchema]]'s columns (see [[tileRollup]]).
@@ -44,14 +48,32 @@ object GraftJob {
     * HLL sketch (`hll_sketch_agg`, default lgConfigK) of the tile's
     * `src:poly_id` keys; unlike a bare distinct-count estimate it merges
     * across batches and buckets with `hll_union_agg`, and
-    * `n_distinct_polys` is its estimate ([[withDistinctPolys]]). */
+    * `n_distinct_polys` is its estimate ([[withDistinctPolys]]).
+    *
+    * One aggregate keyed on `tile` over images ∪ hits, so both sides
+    * share one exchange with map-side partial aggregation and no join.
+    * An image row carries `tile_z` and a non-null marker; a hit row
+    * carries its `src:poly_id` key (`src` and `poly_id` are non-null on
+    * every hit). Tiles without an image are dropped, as a left join from
+    * the images would; `tile_x`/`tile_y` come from the packed id. */
   def tileRollup(assigned: DataFrame, hits: DataFrame): DataFrame = {
-    val tileImages = assigned.groupBy("tile", "tile_z", "tile_x", "tile_y")
-      .agg(count(lit(1)).as("n_images"))
-    val tileHits = hits.groupBy("tile")
-      .agg(count(lit(1)).as("n_hits"),
-        hll_sketch_agg(concat(col("src"), lit(":"), col("poly_id"))).as("polys_sketch"))
-    withDistinctPolys(tileImages.join(tileHits, Seq("tile"), "left"))
+    val tileZ = assigned.schema("tile_z")
+    val images = assigned.select(col("tile"), col("tile_z"), lit(true).as("image"),
+      lit(null).cast(StringType).as("key"))
+    // a hit without a tile matches no image
+    val tileHits = hits.where(col("tile").isNotNull).select(col("tile"),
+      lit(null).cast(tileZ.dataType).as("tile_z"), lit(null).cast(BooleanType).as("image"),
+      concat(col("src"), lit(":"), col("poly_id")).as("key"))
+    val tiles = images.union(tileHits).groupBy("tile")
+      .agg(count("image").as("n_images"), max("tile_z").as("tile_z"),
+        count("key").as("n_hits"), hll_sketch_agg(col("key")).as("polys_sketch"))
+    val imaged = tiles.where(col("n_images") > 0)
+    // every kept tile holds an image, so images that never leave tile_z
+    // null keep it non-nullable, as the join's image side did
+    val zKept = if (tileZ.nullable) imaged
+      else imaged.withColumn("tile_z", ColumnBridge.column(KnownNotNull(ColumnBridge.expression(col("tile_z")))))
+    withDistinctPolys(Tiles.withTileXY(zKept)
+      .withColumn("polys_sketch", when(col("n_hits") > 0, col("polys_sketch"))))
   }
 
   /** Adds `n_distinct_polys` = the estimate of `polys_sketch` and puts the

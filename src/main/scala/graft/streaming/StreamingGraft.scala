@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.pipeline.GraftJob
+import graft.tiles.Tiles
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
@@ -13,9 +14,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * flagship job (north_star: a growing 10^12-image table whose new batches
   * must update tile stats without rescanning history).
   *
-  * Shape: the batch graft job computes two aggregations and joins them —
-  * not expressible as a single incremental streaming plan (two stateful
-  * aggs feeding a join). The supported Spark idiom is `foreachBatch`:
+  * Shape: the batch graft job's PIP join picks broadcast or hot-cell
+  * salting per run from size estimates, and its salted path counts
+  * cells under a window — not a single incremental streaming plan. The
+  * supported Spark idiom is `foreachBatch`:
   * each micro-batch runs the (already scale-disciplined) batch job over
   * the NEW images only and appends that batch's per-tile DELTAS — the
   * batch job's own rollup ([[GraftJob.tileRollup]]). Deltas merge: counts
@@ -112,10 +114,10 @@ object StreamingGraft {
       else None
     ).flatten
     if (parts.isEmpty) None
-    else Some(GraftJob.withDistinctPolys(parts.reduce(_ unionByName _)
-      .groupBy("tile", "tile_z", "tile_x", "tile_y")
-      .agg(sum("n_images").as("n_images"), sum("n_hits").as("n_hits"),
-        hll_union_agg(col("polys_sketch")).as("polys_sketch"))))
+    else Some(GraftJob.withDistinctPolys(Tiles.withTileXY(parts.reduce(_ unionByName _)
+      .groupBy("tile")
+      .agg(max("tile_z").as("tile_z"), sum("n_images").as("n_images"), sum("n_hits").as("n_hits"),
+        hll_union_agg(col("polys_sketch")).as("polys_sketch")))))
   }
 
   /** Fold every delta partition written so far (plus the previous

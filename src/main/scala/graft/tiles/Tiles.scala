@@ -24,6 +24,12 @@ object Tiles {
     points
       .withColumn("tile", F.cell_of(col(lonCol), col(latCol), z))
       .withColumn("tile_z", lit(z))
+      .transform(withTileXY)
+
+  /** Adds `tile_x`/`tile_y`, read off the packed `tile` id (CellMath's
+    * layout: x in bits 29..57, y in bits 0..28); null where `tile` is. */
+  private[graft] def withTileXY(tiles: DataFrame): DataFrame =
+    tiles
       .withColumn("tile_x", shiftright(col("tile"), 29).bitwiseAND(lit(0x1FFFFFFFL)).cast("int"))
       .withColumn("tile_y", col("tile").bitwiseAND(lit(0x1FFFFFFFL)).cast("int"))
 

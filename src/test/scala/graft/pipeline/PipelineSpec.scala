@@ -7,6 +7,7 @@ import graft.spatial.geom.Assembly
 import graft.tiles.{Images, Tiles}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 class PipelineSpec extends AnyFunSuite with SparkTestBase {
@@ -384,5 +385,83 @@ class PipelineSpec extends AnyFunSuite with SparkTestBase {
     val full = asMap(tiles(graft.tiles.ImageTable.load(spark, root)))
     assert(full.values.exists(_._3 > 0L))
     assert(asMap(merged) === full)
+  }
+
+  // hand-built rollup inputs: images a and b share a tile, c is alone in
+  // another, d has no lon; hits are (image_id, tile, src, poly_id)
+  private val rollupZ = 10
+  private def rollupImages = {
+    import spark.implicits._
+    Seq(("a", Some(10.001), 50.001), ("b", Some(10.002), 50.002), ("c", Some(20.0), 40.0),
+      ("d", None, 45.0)).toDF("image_id", "lon", "lat")
+  }
+  private def rollupHits(assigned: org.apache.spark.sql.DataFrame) = {
+    import spark.implicits._
+    val tileOf = assigned.where(col("tile").isNotNull).select("image_id", "tile").as[(String, Long)]
+      .collect().toMap
+    val orphan = graft.spatial.cell.CellMath.cellOf(-70.0, -30.0, rollupZ)
+    // way 7 hit twice counts once; relation 7 is another polygon; the
+    // orphan tile holds no image
+    Seq(("a", tileOf("a"), "way", 7L), ("b", tileOf("b"), "way", 7L),
+      ("a", tileOf("a"), "relation", 7L), ("x", orphan, "way", 9L))
+      .toDF("image_id", "tile", "src", "poly_id")
+  }
+
+  // the rollup's schema over those inputs: tile_z keeps the images'
+  // non-null lit(z), tile and tile_x/tile_y are nullable as lon is
+  private val rollupSchema = StructType(Seq(
+    StructField("tile", LongType), StructField("tile_z", IntegerType, nullable = false),
+    StructField("tile_x", IntegerType), StructField("tile_y", IntegerType),
+    StructField("n_images", LongType, nullable = false), StructField("n_hits", LongType, nullable = false),
+    StructField("n_distinct_polys", LongType, nullable = false), StructField("polys_sketch", BinaryType)))
+
+  test("tileRollup equals a plain-Scala per-tile reference, schema included") {
+    import graft.spatial.cell.CellMath
+    val assigned = Tiles.assignPoints(rollupImages, rollupZ)
+    val hits = rollupHits(assigned)
+    val out = GraftJob.tileRollup(assigned, hits)
+    assert(out.schema === rollupSchema)
+
+    val imageTiles = assigned.select("tile").collect().map(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
+    val hitRows = hits.select("tile", "src", "poly_id").collect().map(r => (r.getLong(0), s"${r.getString(1)}:${r.getLong(2)}"))
+    val expected = imageTiles.groupBy(identity).map { case (tile, imgs) =>
+      val keys = tile.toSeq.flatMap(t => hitRows.collect { case (`t`, k) => k })
+      (tile, rollupZ, tile.map(CellMath.xOf), tile.map(CellMath.yOf), imgs.length.toLong,
+        keys.length.toLong, keys.distinct.length.toLong, keys.nonEmpty)
+    }.toSet
+    val actual = out.collect().map { r =>
+      (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getInt(1), Option(r.get(2)).map(_.asInstanceOf[Int]),
+        Option(r.get(3)).map(_.asInstanceOf[Int]), r.getLong(4), r.getLong(5), r.getLong(6), !r.isNullAt(7))
+    }.toSet
+    assert(actual === expected)
+    // the cases the reference covers: a hit-less tile, a polygon hit
+    // twice, a way and a relation sharing id 7, the orphan hit dropped
+    assert(expected.exists(t => t._6 == 0L && t._7 == 0L && !t._8 && t._1.isDefined))
+    assert(expected.exists(t => t._6 == 3L && t._7 == 2L))
+    assert(expected.size === 3)
+  }
+
+  test("a null-lon image keeps tile_z = z in GraftJob.run, with null tile_x and tile_y") {
+    val out = GraftJob.run(rollupImages, polys, z = rollupZ, res = 12)
+    val nullTile = out.where(col("tile").isNull).collect()
+    assert(nullTile.length === 1)
+    val r = nullTile.head
+    assert(r.getInt(1) === rollupZ && r.isNullAt(2) && r.isNullAt(3))
+    assert((r.getLong(4), r.getLong(5), r.getLong(6), r.isNullAt(7)) === ((1L, 0L, 0L, true)))
+    assert(out.schema === rollupSchema)
+  }
+
+  test("tileRollup shuffles once: one exchange, no join, in the final adaptive plan") {
+    val assigned = Tiles.assignPoints(rollupImages, rollupZ)
+    val out = GraftJob.tileRollup(assigned, rollupHits(assigned))
+    out.collect()
+    val plan = out.queryExecution.executedPlan
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    val exchanges = helper.collect(plan) {
+      case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e
+    }
+    val joins = helper.collect(plan) { case j: org.apache.spark.sql.execution.joins.BaseJoinExec => j }
+    assert(plan.toString.contains("isFinalPlan=true"), plan.toString)
+    assert(exchanges.size === 1 && joins.isEmpty, plan.toString)
   }
 }
